@@ -449,98 +449,177 @@ def minhash_lsh_pairs(
     est_margin: float = 0.15,
     pins: "PinScope | None" = None,
 ) -> DataFrame:
-    """Banded-LSH candidates verified with EXACT shingle Jaccard.
+    """Near-duplicate pairs within `df`: (doc_id, dup_id, jaccard) with
+    doc_id < dup_id and EXACT shingle Jaccard >= threshold.  Precision is
+    1.0; at bands=16, num_perm=64 (r=4) a pair at jaccard j is a candidate
+    with probability 1-(1-j^4)^16 (≈0.99 at j=0.8).
 
-    bands=16, num_perm=64 → r=4 rows/band: candidate probability at
-    jaccard j is 1-(1-j^4)^16 (≈0.99 at j=0.8).
+    `unit`: 'char' shingles, or 'word' for small-vocabulary corpora where
+    char shingle sets coincide (see _word_shingle_hashes).  `est_margin`:
+    candidates whose signature-agreement estimate is below threshold −
+    est_margin never reach the text verify; the estimate's std at 0.8/64
+    is ≈0.05, so the default is 3σ.
 
-    `unit`: shingle unit ('char' default; 'word' for small-vocabulary
-    corpora where char shingle sets coincide — see _word_shingle_hashes).
-    `est_margin`: before the Arrow text verify, candidates are pre-filtered
-    on the pure-JVM signature-agreement Jaccard estimate, keeping only
-    est ≥ threshold − est_margin.  The estimate's std at j=threshold is
-    √(j(1−j)/num_perm) (≈0.05 at 0.8/64), so the default margin is 3σ —
-    the exact verify still decides membership; the estimate only prunes
-    candidates the banding let through far below threshold (the S-curve at
-    r=4 admits ~half of all pairs at j≈0.5: measured 5.2M candidates →
-    214 verified at sf0.1; the pre-filter removes that 10⁴x Arrow blowup).
+    `_lsh_pairs` with every row new and no old side: char units with
+    integral ids run the per-bucket est-kernel (char buckets flood on small
+    vocabularies), everything else the banded self-join.
     """
-    assert num_perm % bands == 0
-    r = num_perm // bands
     sigs = _pin(
         minhash_signatures(df, id_col, text_col, n, num_perm, seed, unit=unit), pins
     )
-    if unit == "char" and isinstance(
-        df.schema[id_col].dataType, _INTEGRAL_ID_TYPES
-    ):
-        # candidate enumeration + est pre-filter fused into the per-bucket
-        # Arrow kernel (see _est_passing_pairs_kernel): the self-join's
-        # |bucket|² candidate mass never materializes and the JVM zip_with
-        # estimate fold (~0.6M rows/s measured) is replaced by one numpy
-        # agreement matrix per bucket.  With every row flagged _new the
-        # kernel's admission reduces to l.doc_id < r.doc_id — exactly the
-        # self-join's strict-order condition.  Char shingles are the
-        # measured flood regime (5.2M candidates at sf0.1, 64M at sf1.0);
-        # word-unit buckets stay sparse (the small-vocabulary fix), where
-        # the kernel's signature shuffle costs more than the skinny
-        # broadcast join it replaces — word keeps the join path.
-        banded_s = band_buckets(sigs, bands, r, keep_signature=True).withColumn(
-            "_new", F.lit(True)
+    return _lsh_pairs(
+        sigs, None, None, _doc_texts(df, id_col, text_col),
+        n, num_perm, bands, threshold, unit, est_margin, pins,
+    )
+
+
+def minhash_lsh_pairs_incremental(
+    new: DataFrame,
+    old: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int = 3,
+    num_perm: int = 64,
+    bands: int = 16,
+    threshold: float = 0.8,
+    seed: int = 42,
+    unit: str = "char",
+    est_margin: float = 0.15,
+    pins: "PinScope | None" = None,
+    old_sigs: DataFrame | None = None,
+    old_banded: DataFrame | None = None,
+) -> DataFrame:
+    """minhash_lsh_pairs over new ∪ old restricted to the pairs TOUCHING
+    `new` (new×new and new×old, never old×old): a daily shard against an
+    already-deduped standing corpus.  Output ≡ the full operator's pairs
+    filtered to those touching `new`.  Ids must be unique across both
+    frames.  Candidate mass per bucket is |new_b|·|all_b|, linear in the
+    shard; `old` texts are read only by the verify join.
+
+    `old_sigs`: persisted minhash_signatures(old, ...) with the SAME (n,
+    num_perm, seed, unit) — skips the standing corpus's signature pass.
+    `old_banded` (requires `old_sigs`): the banding stored by
+    `write_neardup_store`, bucketed by (band, bucket): the shard joins it
+    without re-banding, the store side never shuffles, and untouched store
+    buckets are semi-joined away first.
+
+    `_lsh_pairs` with the old side: a stored banding runs the banded join;
+    otherwise char units with integral ids run the per-bucket est-kernel
+    and everything else the banded join (word buckets are sparse).
+    """
+    if old_banded is not None and old_sigs is None:
+        raise ValueError(
+            "old_banded requires old_sigs: the estimate filter needs the "
+            "standing signatures, and recomputing them would defeat the "
+            "stored layout"
         )
-        cands = _est_passing_pairs(
-            banded_s, num_perm, threshold - est_margin,
-            df.schema[id_col].dataType,
-        )
+
+    def sigs_of(d: DataFrame) -> DataFrame:
+        sigs = minhash_signatures(d, id_col, text_col, n, num_perm, seed, unit=unit)
+        return _pin(sigs, pins)
+
+    sigs_new = sigs_of(new)
+    sigs_old = old_sigs if old_sigs is not None else sigs_of(old)
+    texts = _doc_texts(new, id_col, text_col).unionByName(
+        _doc_texts(old, id_col, text_col)
+    )
+    return _lsh_pairs(
+        sigs_new, sigs_old, old_banded, texts,
+        n, num_perm, bands, threshold, unit, est_margin, pins,
+    )
+
+
+def _doc_texts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    return df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
+
+
+_INTEGRAL_ID_TYPES = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
+
+
+def _lsh_pairs(
+    sigs_new: DataFrame, sigs_old: DataFrame | None,
+    banded_old: DataFrame | None, texts: DataFrame, n: int, num_perm: int,
+    bands: int, threshold: float, unit: str, est_margin: float,
+    pins: "PinScope | None",
+) -> DataFrame:
+    """The MinHash-LSH pair engine behind both public operators: the pairs
+    (new×new with doc_id < dup_id) ∪ (new×old) that share a band bucket,
+    whose signature-agreement estimate is >= threshold − est_margin and
+    whose exact Jaccard over `texts` (doc_id, __text) is >= threshold.
+
+    Two candidate strategies with identical pair sets:
+      * est-kernel (`_est_passing_pairs`): colocates each bucket's members
+        with their signatures and emits only est-passing pairs, so the
+        |bucket|² candidate mass never materializes — the win where char
+        shingles flood buckets.  Needs integral ids; shuffles every banded
+        row's signature.
+      * banded join + JVM estimate: skinny (doc_id, band, bucket) rows,
+        cheaper on sparse word-shingle buckets, and the only one that reads
+        a stored bucketed banding without shuffling it.
+    """
+    assert num_perm % bands == 0
+    r = num_perm // bands
+    cut = threshold - est_margin
+    id_type = sigs_new.schema["doc_id"].dataType
+    integral_ids = isinstance(id_type, _INTEGRAL_ID_TYPES)
+    if banded_old is None and unit == "char" and integral_ids:
+        def tagged(sigs: DataFrame, is_new: bool) -> DataFrame:
+            banded = band_buckets(sigs, bands, r, keep_signature=True)
+            return banded.withColumn("_new", F.lit(is_new))
+
+        banded = tagged(sigs_new, True)
+        if sigs_old is not None:
+            banded = banded.unionByName(tagged(sigs_old, False))
+        cands = _est_passing_pairs(banded, num_perm, cut, id_type)
     else:
-        banded = band_buckets(sigs, bands, r)
-        # persist: the bucket self-join reads `banded` on BOTH sides, and
-        # broadcast/shuffle sides don't share an Exchange — without pinning,
-        # the signature Arrow pass runs twice (measured 2x the pair cost at
-        # sf0.1).  Small frame (id, band, bucket); eviction via `pins`.
-        banded = _pin(banded, pins)
-        l = banded.alias("l")
-        rt = banded.alias("r")
-        cands = (
-            l.join(
-                rt,
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.bucket") == F.col("r.bucket")),
-            )
-            .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-            .select(
-                F.col("l.doc_id").alias("doc_id"),
-                F.col("r.doc_id").alias("dup_id"),
-            )
-            .distinct()
+        # persist: the joins read `banded_new` more than once, and
+        # broadcast/shuffle sides don't share an Exchange — unpinned, the
+        # signature Arrow pass would run twice
+        banded_new = _pin(band_buckets(sigs_new, bands, r), pins)
+        l = banded_new.alias("l")
+        same_bucket = (F.col("l.band") == F.col("r.band")) & (
+            F.col("l.bucket") == F.col("r.bucket")
         )
-        # JVM pre-filter: signature-agreement Jaccard estimate (zip_with, no
-        # Python) — prunes the far-below-threshold candidates before any
-        # text is joined or shipped to Arrow
-        sig_a = sigs.select(F.col("doc_id"), F.col("signature").alias("sig_a"))
-        sig_b = sigs.select(
-            F.col("doc_id").alias("dup_id"), F.col("signature").alias("sig_b")
-        )
-        est = F.aggregate(
+        cands = l.join(
+            banded_new.alias("r"),
+            same_bucket & (F.col("l.doc_id") < F.col("r.doc_id")),
+        ).select(F.col("l.doc_id").alias("doc_id"), F.col("r.doc_id").alias("dup_id"))
+        if sigs_old is not None:
+            if banded_old is None:
+                banded_old = band_buckets(sigs_old, bands, r)
+            touched = banded_new.select("band", "bucket").distinct()
+            banded_old = banded_old.join(
+                F.broadcast(touched), ["band", "bucket"], "left_semi"
+            )
+            # its own join, not new×(new ∪ old): a union would drop a stored
+            # banding's bucketed distribution and shuffle the whole store
+            new_old = (
+                l.join(banded_old.alias("r"), same_bucket)
+                .filter(F.col("l.doc_id") != F.col("r.doc_id"))
+                .select(
+                    F.least("l.doc_id", "r.doc_id").alias("doc_id"),
+                    F.greatest("l.doc_id", "r.doc_id").alias("dup_id"),
+                )
+            )
+            cands = new_old.unionByName(cands)
+        sigs = sigs_new if sigs_old is None else sigs_new.unionByName(sigs_old)
+        agree = F.aggregate(
             F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        ) / F.lit(float(num_perm))
+            F.lit(0), lambda acc, v: acc + v,
+        )
         cands = (
-            cands.join(sig_a, "doc_id")
-            .join(sig_b, "dup_id")
-            .withColumn("est", est)
-            .filter(F.col("est") >= threshold - est_margin)
+            cands.distinct()
+            .join(sigs.toDF("doc_id", "sig_a"), "doc_id")
+            .join(sigs.toDF("dup_id", "sig_b"), "dup_id")
+            .filter(agree / F.lit(float(num_perm)) >= cut)
             .select("doc_id", "dup_id")
         )
-    # exact verify: join candidate pairs back to texts, Jaccard in an Arrow pass
-    texts = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
     pairs = (
         cands.join(texts, "doc_id")
         .withColumnRenamed("__text", "text_a")
         .join(texts.withColumnRenamed("doc_id", "dup_id"), "dup_id")
         .withColumnRenamed("__text", "text_b")
     )
-
     jaccard_udf = _exact_jaccard_udf(unit, n)
     return (
         pairs.withColumn("jaccard", jaccard_udf("text_a", "text_b"))
@@ -549,30 +628,18 @@ def minhash_lsh_pairs(
     )
 
 
-_INTEGRAL_ID_TYPES = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-
-
 def _est_passing_pairs_kernel(num_perm: int, cut: float):
-    """Arrow kernel over hash-colocated (band, bucket) groups: enumerate the
-    banded candidate pairs whose signature-agreement estimate passes the
-    pre-filter, WITHOUT materializing the candidate join.
+    """Arrow kernel over hash-colocated (band, bucket, _salt) groups of
+    (doc_id, signature, band, bucket, _new, _salt, _probe) rows: each
+    group's PROBE members meet ALL members in one agreement-count matrix,
+    emitting the pairs the banded join + estimate filter would keep:
 
-    Input partition rows: (doc_id, signature, band, bucket, _new, _salt,
-    _probe) with every row of a (band, bucket, _salt) key colocated
-    (repartition by those columns — `_est_passing_pairs` builds the salted
-    frame).  For each group the PROBE members are compared against ALL
-    members with one vectorized agreement-count matrix — the same
-    semantics as the banded join + distinct + zip_with estimate filter:
+        same (band, bucket) AND (r is old OR l.doc < r.doc) AND l.doc != r.doc
+        AND (# equal signature rows)/num_perm >= cut
 
-        join cond: same (band, bucket) AND (r is old OR l.doc < r.doc)
-                   AND l.doc != r.doc
-        est      : (# equal signature rows)/num_perm  >=  cut
-
-    measured 0.6M est-evals/s for the JVM zip_with fold at sf1.0 (107M
-    banded hits → 170 s); the numpy matrix form runs the identical IEEE
-    comparison at memory bandwidth.  Output carries per-bucket multiplicity
-    (a pair sharing k bands is emitted k times) — callers .distinct(),
-    exactly as the join path did."""
+    The numpy matrix runs the JVM filter's IEEE comparison at memory
+    bandwidth (the JVM zip_with fold: ~0.6M estimates/s).  A pair sharing
+    k bands is emitted k times — the caller .distinct()s."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parts = list(batches)
@@ -618,10 +685,7 @@ def _est_passing_pairs_kernel(num_perm: int, cut: float):
                     out_b.append(np.maximum(a, b))
         if out_a:
             yield pd.DataFrame(
-                {
-                    "doc_id": np.concatenate(out_a),
-                    "dup_id": np.concatenate(out_b),
-                }
+                {"doc_id": np.concatenate(out_a), "dup_id": np.concatenate(out_b)}
             )
 
     return kernel
@@ -635,20 +699,13 @@ def _est_passing_pairs(
     hot_work: int = 4_000_000,
     max_salt: int = 16,
 ) -> DataFrame:
-    """Salted per-bucket est-passing pair enumeration (the kernel's driver).
-
-    ``banded_s``: (doc_id, signature, band, bucket, _new).  Hash-colocating
-    whole buckets leaves the hot ones on one task: at sf1.0 the largest
-    (band, bucket) holds 22% of ALL probe×member comparisons (24.4M of
-    110M) and the max hash-partition 25% — a 16× max/avg straggler.  Guide
-    §2.5 split-the-hot-key: a cheap skinny count pass finds buckets whose
-    probe×member product exceeds ``hot_work``; their PARTNER rows replicate
-    across ceil(work/hot_work) salts (bounded by ``max_salt``) while each
-    probe row lights up in exactly ONE salt — so every (probe, partner)
-    pair still meets exactly once and the emitted pair set is unchanged.
-    Cold buckets pay nothing (salt 1, no replication; the extra shuffle is
-    only Σ_hot m_all·(s−1) rows — ~220k of 886k at sf1.0)."""
-    spark = banded_s.sparkSession
+    """Salted per-bucket est-passing pair enumeration around the kernel
+    over ``banded_s`` (doc_id, signature, band, bucket, _new).  Buckets whose
+    probe×member product exceeds ``hot_work`` (at sf1.0 one bucket held 22%
+    of all comparisons) replicate their rows across ceil(work/hot_work)
+    salts, at most ``max_salt``, while each probe row probes in exactly ONE
+    salt — every (probe, partner) pair meets once, the pair set is
+    unchanged, and cold buckets (salt 1) replicate nothing."""
     counts = banded_s.groupBy("band", "bucket").agg(
         F.sum(F.when(F.col("_new"), 1).otherwise(0)).alias("_mn"),
         F.count(F.lit(1)).alias("_ma"),
@@ -657,11 +714,9 @@ def _est_passing_pairs(
         counts.withColumn("_w", F.col("_mn") * F.col("_ma"))
         .filter(F.col("_w") > hot_work)
         .select(
-            "band",
-            "bucket",
+            "band", "bucket",
             F.least(
-                F.lit(max_salt),
-                F.ceil(F.col("_w") / F.lit(hot_work)).cast("int"),
+                F.lit(max_salt), F.ceil(F.col("_w") / F.lit(hot_work)).cast("int")
             ).alias("_s"),
         )
     )
@@ -669,11 +724,7 @@ def _est_passing_pairs(
         banded_s.join(F.broadcast(hot), ["band", "bucket"], "left")
         .withColumn("_s", F.coalesce(F.col("_s"), F.lit(1)))
         .select(
-            "doc_id",
-            "signature",
-            "band",
-            "bucket",
-            "_new",
+            "doc_id", "signature", "band", "bucket", "_new",
             F.explode(F.sequence(F.lit(0), F.col("_s") - 1)).alias("_salt"),
             F.pmod(F.xxhash64(F.col("doc_id")), F.col("_s").cast("bigint"))
             .cast("int")
@@ -683,17 +734,12 @@ def _est_passing_pairs(
         .drop("_own")
     )
     pair_schema = T.StructType(
-        [
-            T.StructField("doc_id", id_type, False),
-            T.StructField("dup_id", id_type, False),
-        ]
+        [T.StructField(c, id_type, False) for c in ("doc_id", "dup_id")]
     )
-    p = 2 * spark.sparkContext.defaultParallelism
+    p = 2 * banded_s.sparkSession.sparkContext.defaultParallelism
     return (
         b.repartition(p, "band", "bucket", "_salt")
-        .mapInPandas(
-            _est_passing_pairs_kernel(num_perm, cut), schema=pair_schema
-        )
+        .mapInPandas(_est_passing_pairs_kernel(num_perm, cut), schema=pair_schema)
         .distinct()
     )
 
@@ -702,18 +748,15 @@ _GRAM_PAD = 0x1FFFFF  # > max unicode codepoint (0x10FFFF): short-string filler
 
 
 def _exact_jaccard_udf(unit: str, n: int):
-    """Arrow verify stage shared by the full and incremental LSH pair ops:
-    exact shingle-set Jaccard, rounded to 4 dp (the oracle convention).
+    """The LSH engine's Arrow verify stage: exact shingle-set Jaccard,
+    rounded to 4 dp (the oracle convention).
 
     Fast path (unit='char', n<=3): each n-gram is BIJECTIVELY encoded as an
     int64 (n codepoints x 21 bits; positions past a short string's end take
     a pad above the unicode range, so a short string never collides with a
-    full gram) — set sizes over the codes are exactly the string-set sizes,
-    and the per-doc unique-code array is memoized per task (each doc
-    appears in many candidate pairs; rebuilding its Python string set per
-    pair was the verify stage's dominant cost: 31 s for 3.4M pairs at
-    sf1.0).  Word units / larger n keep the set path, with the same
-    memoization."""
+    full gram).  Both paths memoize each doc's shingles per task: a doc
+    appears in many candidate pairs (rebuilding per pair cost 31 s for 3.4M
+    pairs at sf1.0)."""
 
     char_fast = unit == "char" and n <= 3
 
@@ -778,200 +821,6 @@ def _exact_jaccard_udf(unit: str, n: int):
     # UDF twice per pair (two ArrowEvalPython nodes — guide §4.4; measured
     # 12.8 s single-eval vs 42 s through the filter+project plan at sf1.0)
     return jaccard_udf.asNondeterministic()
-
-
-def minhash_lsh_pairs_incremental(
-    new: DataFrame,
-    old: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_perm: int = 64,
-    bands: int = 16,
-    threshold: float = 0.8,
-    seed: int = 42,
-    unit: str = "char",
-    est_margin: float = 0.15,
-    pins: "PinScope | None" = None,
-    old_sigs: DataFrame | None = None,
-    old_banded: DataFrame | None = None,
-    prune_old_buckets: bool = True,
-) -> DataFrame:
-    """minhash_lsh_pairs restricted to pairs TOUCHING the `new` shard:
-    new×old and new×new, never old×old — the batch complement of
-    streaming/neardup.py's delta regime, for the standing-corpus pattern
-    (daily crawl shard against an already-deduped corpus).
-
-    Why not union + filter: a self-join over the union builds every
-    old-bucket's |old_b|² candidate rows before any filter can drop them —
-    the exact quadratic term the r5 scale runs measured.  Here the join is
-    ASYMMETRIC (banded new against banded old ∪ new), so per-bucket
-    candidate mass is |new_b|·|all_b|: linear in the shard for fixed
-    standing occupancy.  The old corpus pays one signature pass and one
-    shuffle by (band, bucket) — no state is kept between runs; pass
-    `old_sigs` (a persisted minhash_signatures(old, ...) table with the
-    SAME (n, num_perm, seed, unit)) to skip that pass, the amortized
-    daily-shard mode: each run appends the shard's signatures to the
-    store, so the standing corpus is tokenized exactly once ever.  `old`
-    texts are still consumed — but only by the exact-verify join against
-    the (shard-proportional) candidate set, never re-shingled.
-
-    Same (n, num_perm, bands, seed, unit, est_margin) semantics and
-    verify stages as minhash_lsh_pairs, so output ≡ the full operator's
-    pairs filtered to those touching `new`.  Requires ids unique ACROSS
-    both frames (pair identity is id-based); output is (doc_id, dup_id,
-    jaccard) with doc_id < dup_id regardless of which side is new.
-
-    `old_banded` (requires `old_sigs`): a PRE-BANDED standing table — the
-    `write_neardup_store` layout, `(doc_id, band, bucket)` bucketed by
-    (band, bucket) — removes the remaining O(standing) compute term, the
-    per-shard re-banding (explode + xxhash over |old|×bands rows): the
-    shard joins the stored banding directly, and because the store scan's
-    bucketing already satisfies the join's distribution, only the
-    shard-sized side shuffles.  `prune_old_buckets` additionally
-    broadcast-semi-joins the store on the shard's touched (band, bucket)
-    keys (shard×bands rows — small) so untouched standing buckets never
-    enter the join.  Pairs are identical to the recompute path by
-    construction (same signatures ⇒ same banding)."""
-    assert num_perm % bands == 0
-    r = num_perm // bands
-    spark = new.sparkSession
-    sigs_new = _pin(
-        minhash_signatures(new, id_col, text_col, n, num_perm, seed, unit=unit),
-        pins,
-    )
-    sigs_old = old_sigs if old_sigs is not None else _pin(
-        minhash_signatures(old, id_col, text_col, n, num_perm, seed, unit=unit),
-        pins,
-    )
-    # est pre-filter applied during candidate ENUMERATION (Arrow kernel)
-    # for integral ids on the recompute path: the banded join's candidate
-    # mass is |new_b|·|all_b| per bucket — at sf1.0 (char shingles, small
-    # vocabulary) 107M raw hits → a 64M-row distinct + 64M JVM zip_with
-    # estimates dominated the query (measured 87 s total; the JVM fold
-    # alone runs at ~0.6M rows/s).  The kernel colocates each (band,
-    # bucket)'s members and emits ONLY est-passing pairs, so the distinct
-    # sees the ~3σ sliver (11.5M rows at sf1.0), not the full mass.
-    kernel_path = old_banded is None and isinstance(
-        new.schema[id_col].dataType, _INTEGRAL_ID_TYPES
-    )
-    need_est_join = True
-    if not kernel_path:
-        banded_new = _pin(band_buckets(sigs_new, bands, r), pins)
-        l = banded_new.alias("l")
-    if kernel_path:
-        banded_all_s = (
-            band_buckets(sigs_new, bands, r, keep_signature=True)
-            .withColumn("_new", F.lit(True))
-            .unionByName(
-                band_buckets(sigs_old, bands, r, keep_signature=True)
-                .withColumn("_new", F.lit(False))
-            )
-        )
-        cands = _est_passing_pairs(
-            banded_all_s, num_perm, threshold - est_margin,
-            new.schema[id_col].dataType,
-        )
-        need_est_join = False
-    elif old_banded is not None:
-        if old_sigs is None:
-            raise ValueError(
-                "old_banded requires old_sigs: the estimate filter needs the "
-                "standing signatures, and recomputing them would defeat the "
-                "stored layout"
-            )
-        banded_old = old_banded
-        if prune_old_buckets:
-            touched = banded_new.select("band", "bucket").distinct()
-            banded_old = banded_old.join(
-                F.broadcast(touched), ["band", "bucket"], "left_semi"
-            )
-        # new×old and new×new as separate joins (instead of new×union) so
-        # the stored side keeps its bucketed distribution — unioning would
-        # discard it and force a full shuffle of the standing banding
-        new_old = (
-            l.join(
-                banded_old.alias("r"),
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.bucket") == F.col("r.bucket")),
-            )
-            .filter(F.col("l.doc_id") != F.col("r.doc_id"))
-            .select(
-                F.least(F.col("l.doc_id"), F.col("r.doc_id")).alias("doc_id"),
-                F.greatest(F.col("l.doc_id"), F.col("r.doc_id")).alias("dup_id"),
-            )
-        )
-        new_new = l.join(
-            banded_new.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        ).select(
-            F.col("l.doc_id").alias("doc_id"),
-            F.col("r.doc_id").alias("dup_id"),
-        )
-        cands = new_old.unionByName(new_new).distinct()
-    else:
-        banded_all = banded_new.withColumn("_new", F.lit(True)).unionByName(
-            band_buckets(sigs_old, bands, r).withColumn("_new", F.lit(False))
-        )
-        rt = banded_all.alias("r")
-        cands = (
-            l.join(
-                rt,
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.bucket") == F.col("r.bucket"))
-                # old partners pair with every new bucket-mate (old is never
-                # on the left, so each new×old pair appears exactly once);
-                # new partners need the strict order so new×new pairs don't
-                # double
-                & (~F.col("r._new") | (F.col("l.doc_id") < F.col("r.doc_id"))),
-            )
-            .filter(F.col("l.doc_id") != F.col("r.doc_id"))
-            .select(
-                F.least(F.col("l.doc_id"), F.col("r.doc_id")).alias("doc_id"),
-                F.greatest(F.col("l.doc_id"), F.col("r.doc_id")).alias("dup_id"),
-            )
-            .distinct()
-        )
-    if need_est_join:
-        sigs = sigs_new.unionByName(sigs_old)
-        sig_a = sigs.select(F.col("doc_id"), F.col("signature").alias("sig_a"))
-        sig_b = sigs.select(
-            F.col("doc_id").alias("dup_id"), F.col("signature").alias("sig_b")
-        )
-        est = F.aggregate(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        ) / F.lit(float(num_perm))
-        cands = (
-            cands.join(sig_a, "doc_id")
-            .join(sig_b, "dup_id")
-            .withColumn("est", est)
-            .filter(F.col("est") >= threshold - est_margin)
-            .select("doc_id", "dup_id")
-        )
-    texts = (
-        new.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text"))
-        .unionByName(
-            old.select(
-                F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text")
-            )
-        )
-    )
-    pairs = (
-        cands.join(texts, "doc_id")
-        .withColumnRenamed("__text", "text_a")
-        .join(texts.withColumnRenamed("doc_id", "dup_id"), "dup_id")
-        .withColumnRenamed("__text", "text_b")
-    )
-    jaccard_udf = _exact_jaccard_udf(unit, n)
-    return (
-        pairs.withColumn("jaccard", jaccard_udf("text_a", "text_b"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_id", "dup_id", "jaccard")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -50,7 +50,10 @@ def write(df: pd.DataFrame, out_dir: str, name: str) -> None:
 def main() -> None:
     sf = float(sys.argv[1]) if len(sys.argv) > 1 else 1.0
     out_dir = sys.argv[2] if len(sys.argv) > 2 else f"/root/sfgen/sf{sf}"
-    assert "/testdata/" not in out_dir, "testdata is read-only (TESTDATA.md)"
+    out_dir = os.path.realpath(out_dir)
+    assert "testdata" not in out_dir.split(os.sep), (
+        "testdata is read-only (TESTDATA.md)"
+    )
     os.makedirs(out_dir, exist_ok=True)
     rng = np.random.default_rng(42)
 
@@ -74,11 +77,13 @@ def main() -> None:
     tgt = rng.choice(n_docs, n_near, replace=False)
     for i in tgt:
         src = int(rng.integers(0, n_docs))
+        while src == i and n_docs > 1:  # a doc cannot near-dup itself
+            src = int(rng.integers(0, n_docs))
         w = texts[src].split()
         pos = int(rng.integers(0, len(w) + 1))
         texts[i] = " ".join(w[:pos] + ["dup"] + w[pos:])
-    # ~0.16% exact-dup pairs
-    n_exact = max(n_docs // 625, 1) // 2
+    # ~0.16% exact-dup pairs, at least one pair at any sf
+    n_exact = min(max(n_docs // 1250, 1), n_docs // 2)
     pick = rng.choice(n_docs, 2 * n_exact, replace=False)
     for a, b in zip(pick[:n_exact], pick[n_exact:]):
         texts[b] = texts[a]

@@ -90,31 +90,33 @@ class TestDedup:
     def test_minhash_incremental_equals_full_restricted(self, spark, docs):
         """The incremental operator's contract: output ≡ the FULL
         operator's pairs over new ∪ old, restricted to pairs touching the
-        new shard — with identical jaccard values."""
+        new shard — with identical jaccard values.  Both shingle units:
+        word is what the curation and shard-ingest paths run."""
         from pyspark.sql import functions as F
 
         new = docs.filter(F.col("doc_id") % 2 == 0).select(
             (F.col("doc_id") + 1000).alias("doc_id"),
             F.concat("text", F.lit(" z")).alias("text"),
         )
-        full = dedup.minhash_lsh_pairs(
-            docs.select("doc_id", "text").unionByName(new),
-            "doc_id", "text", n=3, threshold=0.7,
-        ).toPandas()
         new_ids = {r["doc_id"] for r in new.collect()}
-        want = {
-            (a, b): j
-            for a, b, j in zip(full.doc_id, full.dup_id, full.jaccard)
-            if a in new_ids or b in new_ids
-        }
-        got = dedup.minhash_lsh_pairs_incremental(
-            new, docs.select("doc_id", "text"), "doc_id", "text",
-            n=3, threshold=0.7,
-        ).toPandas()
-        assert {
-            (a, b): j for a, b, j in zip(got.doc_id, got.dup_id, got.jaccard)
-        } == want
-        assert want  # non-vacuous: the shard really near-dups the corpus
+        for unit in ("char", "word"):
+            full = dedup.minhash_lsh_pairs(
+                docs.select("doc_id", "text").unionByName(new),
+                "doc_id", "text", n=3, threshold=0.7, unit=unit,
+            ).toPandas()
+            want = {
+                (a, b): j
+                for a, b, j in zip(full.doc_id, full.dup_id, full.jaccard)
+                if a in new_ids or b in new_ids
+            }
+            got = dedup.minhash_lsh_pairs_incremental(
+                new, docs.select("doc_id", "text"), "doc_id", "text",
+                n=3, threshold=0.7, unit=unit,
+            ).toPandas()
+            assert {
+                (a, b): j for a, b, j in zip(got.doc_id, got.dup_id, got.jaccard)
+            } == want, unit
+            assert want, unit  # non-vacuous: the shard near-dups the corpus
 
     def test_minhash_incremental_never_pairs_old_with_old(self, spark):
         """Two identical OLD docs never pair (their dup was settled when
@@ -166,9 +168,9 @@ class TestDedup:
         self, spark, docs, tmp_path
     ):
         """The stored-layout mode (write_neardup_store → old_sigs +
-        old_banded, with and without the touched-bucket prune) must produce
-        output identical to the recompute path — same signatures ⇒ same
-        banding ⇒ same candidates, estimates, and verified pairs."""
+        old_banded) must produce output identical to the recompute path —
+        same signatures ⇒ same banding ⇒ same candidates, estimates, and
+        verified pairs — at both shingle units."""
         import uuid
 
         from pyspark.sql import functions as F
@@ -178,30 +180,29 @@ class TestDedup:
             F.concat("text", F.lit(" z")).alias("text"),
         )
         old = docs.select("doc_id", "text")
-        want = dedup.minhash_lsh_pairs_incremental(
-            new, old, "doc_id", "text", n=3, threshold=0.7,
-        ).toPandas()
-        prefix = f"nd_{uuid.uuid4().hex[:8]}"
-        dedup.write_neardup_store(
-            dedup.minhash_signatures(old, "doc_id", "text", n=3),
-            prefix, n_buckets=4, path=str(tmp_path / "store"),
-        )
-        try:
-            s_sigs, s_banded = dedup.read_neardup_store(spark, prefix)
-            key = lambda df: {
-                (a, b): j for a, b, j in zip(df.doc_id, df.dup_id, df.jaccard)
-            }
-            for prune in (True, False):
+        key = lambda df: {
+            (a, b): j for a, b, j in zip(df.doc_id, df.dup_id, df.jaccard)
+        }
+        for unit in ("char", "word"):
+            want = dedup.minhash_lsh_pairs_incremental(
+                new, old, "doc_id", "text", n=3, threshold=0.7, unit=unit,
+            ).toPandas()
+            prefix = f"nd_{uuid.uuid4().hex[:8]}"
+            dedup.write_neardup_store(
+                dedup.minhash_signatures(old, "doc_id", "text", n=3, unit=unit),
+                prefix, n_buckets=4, path=str(tmp_path / f"store_{unit}"),
+            )
+            try:
+                s_sigs, s_banded = dedup.read_neardup_store(spark, prefix)
                 got = dedup.minhash_lsh_pairs_incremental(
-                    new, old, "doc_id", "text", n=3, threshold=0.7,
+                    new, old, "doc_id", "text", n=3, threshold=0.7, unit=unit,
                     old_sigs=s_sigs, old_banded=s_banded,
-                    prune_old_buckets=prune,
                 ).toPandas()
-                assert key(got) == key(want), prune
-            assert len(want)
-        finally:
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_sigs")
-            spark.sql(f"DROP TABLE IF EXISTS {prefix}_banded")
+                assert key(got) == key(want), unit
+                assert len(want), unit
+            finally:
+                spark.sql(f"DROP TABLE IF EXISTS {prefix}_sigs")
+                spark.sql(f"DROP TABLE IF EXISTS {prefix}_banded")
 
     def test_minhash_incremental_store_append_flow(self, spark, docs, tmp_path):
         """The daily loop: backfill store from A, dedup shard B against it,

@@ -426,6 +426,69 @@ class TestNeardupStorePlan:
             spark.sql(f"DROP TABLE IF EXISTS {prefix}_sigs")
             spark.sql(f"DROP TABLE IF EXISTS {prefix}_banded")
 
+    def test_lsh_operators_store_side_and_single_verify(self, spark, tmp_path):
+        """The operators themselves: minhash_lsh_pairs_incremental over a
+        stored word-unit banding reads the store scan into its candidate
+        join with NO Exchange in between, and both LSH operators evaluate
+        the exact-Jaccard verify UDF in exactly one ArrowEvalPython node."""
+        import uuid
+
+        from py_evalfilter_spark.operators import dedup
+
+        docs = dq._read(spark, SF, "documents").select("doc_id", "text").limit(200)
+        shard = docs.limit(40).select(
+            (F.col("doc_id") + 10_000_000).alias("doc_id"), "text"
+        )
+        prefix = f"ndplan_{uuid.uuid4().hex[:8]}"
+        dedup.write_neardup_store(
+            dedup.minhash_signatures(docs, "doc_id", "text", unit="word"),
+            prefix, n_buckets=4, path=str(tmp_path / "store"),
+        )
+        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            s_sigs, s_banded = dedup.read_neardup_store(spark, prefix)
+            plan = _plan(
+                dedup.minhash_lsh_pairs_incremental(
+                    shard, docs, "doc_id", "text", unit="word",
+                    old_sigs=s_sigs, old_banded=s_banded,
+                )
+            )
+            store_path = _path_to_sort_merge_join(plan, f"{prefix}_banded[")
+            assert store_path, plan
+            assert not any("Exchange" in node for node in store_path), store_path
+            assert plan.count("ArrowEvalPython") == 1, plan
+
+            full = _plan(dedup.minhash_lsh_pairs(docs, "doc_id", "text", unit="word"))
+            assert full.count("ArrowEvalPython") == 1, full
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+            spark.sql(f"DROP TABLE IF EXISTS {prefix}_sigs")
+            spark.sql(f"DROP TABLE IF EXISTS {prefix}_banded")
+
+
+def _path_to_sort_merge_join(plan: str, needle: str) -> list[str]:
+    """Plan nodes from the first node containing `needle` up through its
+    nearest SortMergeJoin ancestor ([] if either is missing).  A node's
+    depth in the tree string is the column of its `+-`/`:-` marker."""
+    lines = plan.splitlines()
+
+    def depth(line: str) -> int:
+        hits = [i for i in (line.find("+- "), line.find(":- ")) if i >= 0]
+        return min(hits) if hits else -1
+
+    start = next((i for i, l in enumerate(lines) if needle in l), None)
+    if start is None:
+        return []
+    path, d = [lines[start]], depth(lines[start])
+    for line in reversed(lines[:start]):
+        if depth(line) < d:
+            path.append(line)
+            d = depth(line)
+            if "SortMergeJoin" in line:
+                return path
+    return []
+
 
 class TestBm25DoclenPlan:
     def test_doclen_side_never_shuffles(self, spark, tmp_path):
