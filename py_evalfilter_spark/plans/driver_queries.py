@@ -574,7 +574,7 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3: point-in-time purchase value at each turn; DuckDB ASOF JOIN oracle."""
     t = transcripts_df(spark, sf_dir)
     p = profile_df(spark, sf_dir)
-    out = asof_op.asof_join_union_window(t, p, on="ts", by="conv_id", right_ts_alias="profile_ts")
+    out = asof_op.asof_join(t, p, on="ts", by="conv_id", right_ts_alias="profile_ts")
     return out.select(
         "conv_id",
         "turn_idx",
@@ -600,11 +600,11 @@ def q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 with staleness bound: matches older than 3600s are nulled WHOLE
     (the struct-fill guarantee — profile_ts and purchase_value null
     together).  DuckDB oracle: ASOF JOIN + CASE on the same staleness cut
-    (merge_asof tolerance semantics: a too-old match is dropped, never
+    (as-of tolerance semantics: a too-old match is dropped, never
     replaced by an older or newer row)."""
     t = transcripts_df(spark, sf_dir)
     p = profile_df(spark, sf_dir)
-    out = asof_op.asof_join_union_window(
+    out = asof_op.asof_join(
         t, p, on="ts", by="conv_id", right_ts_alias="profile_ts", tolerance_s=3600
     )
     return out.select(

@@ -1,7 +1,7 @@
 """End-to-end feature pipeline (SURVEY.md §3.4): the engine's flagship plan.
 
-transcripts → Arrow feature map → windowed features (one conv_id Exchange)
-→ as-of profile merge (bucketed cogroup) → wide per-turn feature rows.
+transcripts → windowed features (one conv_id Exchange) → as-of profile
+merge (the one-table spine join) → Arrow feature map → wide per-turn rows.
 
 Scale notes (what survives a 1000-executor / 100 TB run):
   * the transcripts derivation's row_number window hash-partitions by user
@@ -95,7 +95,7 @@ def feature_pipeline_staged(
         )
         if "event_id" in t.columns:
             w = w.drop("event_id")
-        return asof_op.asof_join_union_window(
+        return asof_op.asof_join(
             w, dq.profile_df(spark, sf_dir), on="ts", by="conv_id",
             right_ts_alias="profile_ts",
         )
@@ -158,7 +158,7 @@ def feature_pipeline_from_df(
     if "event_id" in transcripts.columns:
         windowed = windowed.drop("event_id")
     if profile is not None:
-        windowed = asof_op.asof_join_union_window(
+        windowed = asof_op.asof_join(
             windowed, profile, on="ts", by="conv_id", right_ts_alias="profile_ts"
         )
     return textfeats.with_rant_stats(windowed)

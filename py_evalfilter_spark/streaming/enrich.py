@@ -15,7 +15,7 @@ Two streaming-native counterparts of batch engine operators:
   ``conv_id = conv_id AND ts in [profile_ts, next_profile_ts)`` — stateless
   per micro-batch, broadcastable, and leak-free by construction (the
   matched profile row always has ``profile_ts <= ts``).  Batch parity with
-  operators/asof.asof_join_union_window is pinned in tests.
+  operators/asof.asof_join is pinned in tests.
 """
 
 from __future__ import annotations

@@ -344,14 +344,14 @@ def main() -> None:
             spine_point_in_time(spine, ftables).selectExpr(*aggs).collect()
 
         def run_chained():
-            s1 = asof.asof_join_union_window(
+            s1 = asof.asof_join(
                 spine,
                 prof.select(
                     "conv_id", "ts",
                     F.col("purchase_value").alias("prof_purchase_value")),
                 right_ts_alias="prof_ts")
             for i, s in enumerate(slices):
-                s1 = asof.asof_join_union_window(
+                s1 = asof.asof_join(
                     s1,
                     s.select("conv_id", "ts",
                              F.col("click_value").alias(f"clk{i}_click_value"),

@@ -7,7 +7,7 @@ pair below the single socket's memory-bus saturation, the established
 BENCH/BASELINE.md methodology) and report throughput at both plus
 efficiency = (thr_4N / thr_N) / 4.
 
-Each level also times the CHAINED 2x asof_join_union_window plan over the
+Each level also times the CHAINED 2x asof_join plan over the
 same inputs — the loop the operator replaces — so the one-shuffle win is
 measured at both parallelism levels, and a pure-shuffle baseline at the
 same row volume (the single-box memory-bus term).
@@ -87,12 +87,12 @@ spine_sec = best_of(
 
 # the loop the operator replaces: 2 chained union-window as-of passes
 def chained():
-    s1 = asof.asof_join_union_window(
+    s1 = asof.asof_join(
         spine,
         prof.select("conv_id", "ts",
                     F.col("purchase_value").alias("prof_purchase_value")),
         right_ts_alias="prof_ts")
-    s2 = asof.asof_join_union_window(
+    s2 = asof.asof_join(
         s1,
         clicks.select("conv_id", "ts",
                       F.col("click_value").alias("clk_click_value"),

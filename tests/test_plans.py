@@ -104,7 +104,7 @@ class TestWindowChain:
     def test_jvm_asof_has_no_python(self, spark):
         t = dq.transcripts_df(spark, SF)
         p = dq.profile_df(spark, SF)
-        plan = _plan(asof.asof_join_union_window(t, p))
+        plan = _plan(asof.asof_join(t, p))
         assert "Python" not in plan
         assert "FlatMapCoGroupsInPandas" not in plan
 

@@ -82,24 +82,23 @@ def test_asof_both_impls_match_golden(spark, data):
             {"conv_id": ["zz"], "ts": pd.to_datetime([0], unit="s"), "pv": [0.0]}
         )
     psdf = spark.createDataFrame(prof)
-    want = golden.golden_asof(pdf, prof.rename(columns={"ts": "ts"}))
+    want = golden.golden_asof(pdf, prof)
     want = want.sort_values(KEY, kind="mergesort").reset_index(drop=True)
-    for impl in (asof.asof_join, asof.asof_join_union_window):
-        out = (
-            impl(sdf, psdf, on="ts", by="conv_id", right_ts_alias="profile_ts")
-            .toPandas()
-            .sort_values(KEY, kind="mergesort")
-            .reset_index(drop=True)
+    out = (
+        asof.asof_join(sdf, psdf, on="ts", by="conv_id", right_ts_alias="profile_ts")
+        .toPandas()
+        .sort_values(KEY, kind="mergesort")
+        .reset_index(drop=True)
+    )
+    for col in ["pv", "profile_ts"]:
+        av, bv = out[col], want[col]
+        assert ((av == bv) | (av.isna() & bv.isna())).all(), (
+            f"{col}\nleft:\n{pdf}\nright:\n{prof}\n"
+            f"got:\n{out[KEY + ['ts', 'profile_ts', 'pv']]}\n"
+            f"want:\n{want[KEY + ['ts', 'profile_ts', 'pv']]}"
         )
-        for col in ["pv", "profile_ts"]:
-            av, bv = out[col], want[col]
-            assert ((av == bv) | (av.isna() & bv.isna())).all(), (
-                f"{impl.__name__} {col}\nleft:\n{pdf}\nright:\n{prof}\n"
-                f"got:\n{out[KEY + ['ts', 'profile_ts', 'pv']]}\n"
-                f"want:\n{want[KEY + ['ts', 'profile_ts', 'pv']]}"
-            )
-        matched = out["profile_ts"].notna()
-        assert (out.loc[matched, "profile_ts"] <= out.loc[matched, "ts"]).all()
+    matched = out["profile_ts"].notna()
+    assert (out.loc[matched, "profile_ts"] <= out.loc[matched, "ts"]).all()
 
 
 def test_asof_matched_row_null_column_stays_null(spark):
@@ -126,17 +125,18 @@ def test_asof_matched_row_null_column_stays_null(spark):
             }
         )
     )
-    for impl in (asof.asof_join, asof.asof_join_union_window):
-        out = impl(left, right, on="ts", by="conv_id", right_ts_alias="profile_ts").toPandas()
-        assert len(out) == 1
-        assert out["seg"].iloc[0] == "new"
-        assert pd.isna(out["pv"].iloc[0]), f"{impl.__name__}: pv leaked from older row"
-        # tolerance: matched row is 100s old; 50s tolerance must null ALL
-        # right columns together (seg came from the matched row, so it must
-        # go too — no partial survival from older rows)
-        out_tol = impl(
-            left, right, on="ts", by="conv_id", right_ts_alias="profile_ts", tolerance_s=50
-        ).toPandas()
-        assert pd.isna(out_tol["profile_ts"].iloc[0])
-        assert pd.isna(out_tol["pv"].iloc[0])
-        assert pd.isna(out_tol["seg"].iloc[0]), f"{impl.__name__}: stale seg survived"
+    out = asof.asof_join(
+        left, right, on="ts", by="conv_id", right_ts_alias="profile_ts"
+    ).toPandas()
+    assert len(out) == 1
+    assert out["seg"].iloc[0] == "new"
+    assert pd.isna(out["pv"].iloc[0]), "pv leaked from older row"
+    # tolerance: matched row is 100s old; 50s tolerance must null ALL
+    # right columns together (seg came from the matched row, so it must
+    # go too — no partial survival from older rows)
+    out_tol = asof.asof_join(
+        left, right, on="ts", by="conv_id", right_ts_alias="profile_ts", tolerance_s=50
+    ).toPandas()
+    assert pd.isna(out_tol["profile_ts"].iloc[0])
+    assert pd.isna(out_tol["pv"].iloc[0])
+    assert pd.isna(out_tol["seg"].iloc[0]), "stale seg survived"

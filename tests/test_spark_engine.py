@@ -114,22 +114,6 @@ class TestAsofSpark:
             av, bv = a.loc[early, col], b.loc[early, col]
             assert ((av == bv) | (av.isna() & bv.isna())).all(), col
 
-    def test_bucket_invariance(self, transcripts_sdf, profiles_sdf):
-        """Result must not depend on the physical bucket count."""
-        a = (
-            asof.asof_join(transcripts_sdf, profiles_sdf, num_buckets=2)
-            .toPandas()
-            .sort_values(KEY, kind="mergesort")
-            .reset_index(drop=True)
-        )
-        b = (
-            asof.asof_join(transcripts_sdf, profiles_sdf, num_buckets=64)
-            .toPandas()
-            .sort_values(KEY, kind="mergesort")
-            .reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(a, b)
-
     def test_tolerance(self, spark):
         t = pd.DataFrame(
             {
@@ -148,25 +132,12 @@ class TestAsofSpark:
         )
         assert out["v"].iloc[0] == 1.5  # 100s stale: within tolerance
         assert pd.isna(out["v"].iloc[1])  # 4100s stale: dropped
+        assert pd.isna(out["ts_right"].iloc[1])  # with its ts (default alias)
 
 
 class TestAsofUnionWindow:
-    """The JVM union-window as-of must be semantically identical to the
-    cogroup/merge_asof variant and to golden."""
-
-    def test_equals_cogroup_variant(self, transcripts_sdf, profiles_sdf):
-        a = (
-            asof.asof_join(transcripts_sdf, profiles_sdf, right_ts_alias="profile_ts")
-            .toPandas().sort_values(KEY, kind="mergesort").reset_index(drop=True)
-        )
-        b = (
-            asof.asof_join_union_window(transcripts_sdf, profiles_sdf, right_ts_alias="profile_ts")
-            .toPandas().sort_values(KEY, kind="mergesort").reset_index(drop=True)
-        )
-        b = b[a.columns]
-        for col in a.columns:
-            av, bv = a[col], b[col]
-            assert ((av == bv) | (av.isna() & bv.isna())).all(), col
+    """`asof_join_union_window` is kept as a second name for `asof_join`;
+    the name must keep the same semantics."""
 
     def test_zero_leakage(self, transcripts_sdf, profiles_sdf):
         out = asof.asof_join_union_window(
@@ -175,8 +146,6 @@ class TestAsofUnionWindow:
         assert out.filter("profile_ts > ts").count() == 0
 
     def test_tolerance(self, spark):
-        import pandas as pd
-
         t = pd.DataFrame(
             {
                 "conv_id": ["c", "c"],

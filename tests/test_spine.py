@@ -42,7 +42,7 @@ def feat_b(spark, transcripts_sdf):
 
 class TestSpineSemantics:
     def test_parity_with_chained_asof(self, spine_sdf, feat_a, feat_b):
-        """k=2 spine join ≡ two chained asof_join_union_window passes —
+        """k=2 spine join ≡ two chained asof_join passes —
         same matched rows, same columns, including per-table tolerance."""
         got = spine_point_in_time(
             spine_sdf,
@@ -54,7 +54,7 @@ class TestSpineSemantics:
             ],
         ).toPandas()
 
-        step1 = asof.asof_join_union_window(
+        step1 = asof.asof_join(
             spine_sdf,
             feat_a.select(
                 "conv_id",
@@ -64,7 +64,7 @@ class TestSpineSemantics:
             ),
             right_ts_alias="prof_ts",
         )
-        step2 = asof.asof_join_union_window(
+        step2 = asof.asof_join(
             step1,
             feat_b.select(
                 F.col("cid").alias("conv_id"),
@@ -128,6 +128,13 @@ class TestSpineSemantics:
                 spine_sdf.withColumnRenamed("turn_idx", "p_turn_idx"),
                 [FeatureTable(clash, "p")],
             )
+        # the k=1 case shares the check: a right value column or the right
+        # ts alias named like a left column fails at plan-build time instead
+        # of yielding two same-named output columns
+        with pytest.raises(ValueError, match="turn_idx"):
+            asof.asof_join(spine_sdf, clash)
+        with pytest.raises(ValueError, match="turn_idx"):
+            asof.asof_join(spine_sdf, feat_a, right_ts_alias="turn_idx")
 
 
 class TestSpinePlan:
@@ -153,6 +160,18 @@ class TestSpinePlan:
                 FeatureTable(fb, "b", by="cid"),
                 FeatureTable(fc, "c", tolerance_s=3600),
             ],
+        )
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+        assert plan.count("Window") == 1, plan
+
+    def test_asof_join_is_the_one_table_case(self, spine_sdf, profiles_sdf):
+        # same plain-projection input, k=1 through the public as-of join
+        out = asof.asof_join(
+            spine_sdf,
+            profiles_sdf.select("conv_id", "ts", "empathies"),
+            right_ts_alias="profile_ts",
+            tolerance_s=3600,
         )
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert plan.count("Exchange hashpartitioning") == 1, plan

@@ -205,7 +205,7 @@ class TestStreamingEnrich:
             .reset_index(drop=True)
         )
         want = (
-            asof.asof_join_union_window(
+            asof.asof_join(
                 sdf, prof, on="ts", by="conv_id", right_ts_alias="profile_ts"
             )
             .toPandas()
