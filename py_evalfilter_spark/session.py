@@ -11,6 +11,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the machine's physical RAM (MemTotal on Linux) in whole GiB,
+    floored at 2g and capped at 48g.  A fixed 48g default let the driver
+    JVM grow past RAM on a 16 GB machine until the kernel OOM-killed it
+    mid test suite; SPARK_DRIVER_MEMORY still overrides this."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return "48g"
+    return f"{min(max(total // (2 * 1024 ** 3), 2), 48)}g"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "py_evalfilter_spark",
@@ -34,7 +46,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         # UI off by default (driver overhead); SPARK_GRAFT_UI=true exposes
         # the REST status API so benches can read per-stage shuffle
         # bytes/records — the term that becomes NETWORK on a real cluster

@@ -903,11 +903,10 @@ class TestClustering:
         )
         single = clustering.semdedup_pairs(emb, cents, threshold=0.999).collect()
         assert single == []
-        for method in ("join", "arrow"):
-            got = clustering.semdedup_pairs(
-                emb, cents, threshold=0.999, multi_assign=2, pair_method=method
-            ).collect()
-            assert [(r["doc_id"], r["dup_id"]) for r in got] == [(0, 1)], method
+        got = clustering.semdedup_pairs(
+            emb, cents, threshold=0.999, multi_assign=2
+        ).collect()
+        assert [(r["doc_id"], r["dup_id"]) for r in got] == [(0, 1)]
 
     def test_semdedup_multi_assign_superset(self, spark):
         """multi_assign=2 output is a strict superset contract: every
@@ -941,10 +940,10 @@ class TestClustering:
         ).collect()
         assert len(rows) == len({(r["doc_id"], r["dup_id"]) for r in rows})
 
-    def test_assign_topm_join_arrow_parity(self, spark):
-        """_assign_topm's two methods agree on the SET of (id, cluster)
-        entries (same round(…,8) distance contract, stable tie-break to
-        the lowest cid on both sides)."""
+    def test_assign_topm_matches_numpy_reference(self, spark):
+        """_assign_topm emits each doc's m nearest centroids: the SET of
+        (id, cluster) entries equals a numpy brute force over the same
+        contract — Σ(x−c)² rounded to 8 dp, ties to the lowest cid."""
         from py_evalfilter_spark.operators import clustering
 
         emb = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -953,70 +952,83 @@ class TestClustering:
             F.col("vec_id").alias("doc_id"),
             F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
         )
+        pdf = emb.select("vec_id", "embedding").toPandas()
+        X = np.stack(pdf.embedding.to_numpy()).astype(np.float64)
+        C = np.asarray(cents, dtype=np.float64)
+        d2 = np.array(
+            [[round(float(((x - c) ** 2).sum()), 8) for c in C] for x in X]
+        )
+        order = np.argsort(d2, axis=1, kind="stable")
         for m in (2, 3):
-            a_join = sorted(
-                (r["doc_id"], r["cluster"])
-                for r in clustering._assign_topm(
-                    d, cents, "doc_id", m, method="join"
-                ).collect()
+            want = sorted(
+                (int(i), int(c))
+                for i, row in zip(pdf.vec_id, order)
+                for c in row[:m]
             )
-            a_arrow = sorted(
+            got = sorted(
                 (r["doc_id"], r["cluster"])
-                for r in clustering._assign_topm(
-                    d, cents, "doc_id", m, method="arrow"
-                ).collect()
+                for r in clustering._assign_topm(d, cents, "doc_id", m).collect()
             )
-            assert a_join == a_arrow, m
+            assert got == want, m
 
-    def test_assign_arrow_join_parity(self, spark):
-        """The vectorized Arrow assign (BLAS matmul) must reproduce the
-        broadcast-crossJoin assign bit-for-bit under the round(…,8)
-        contract: identical centroids out of the fit and identical
-        (id, cluster, dist2) assignments, at a k large enough that the
-        auto path picks arrow."""
+    @staticmethod
+    def _kmeans_oracle(**kw) -> pd.DataFrame:
+        import duckdb
+
+        from py_evalfilter_spark.plans.driver_queries import _kmeans_oracle_sql
+
+        con = duckdb.connect()
+        con.execute(
+            "CREATE VIEW embeddings AS SELECT * FROM "
+            f"read_parquet('{SF}/embeddings.parquet')"
+        )
+        return con.execute(
+            _kmeans_oracle_sql(iters=2, dim=64, seed=42, **kw)
+        ).fetchdf()
+
+    def test_assign_matches_kmeans_oracle(self, spark):
+        """kmeans_fit + assign_clusters reproduce the unrolled DuckDB
+        Lloyd's (driver_queries._kmeans_oracle_sql) at k=8: identical
+        (id, cluster) assignment and dist2 under the round(…,8) argmin
+        and round(…,4) output contract."""
         from py_evalfilter_spark.operators import clustering
 
         emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-        c_join = clustering.kmeans_fit(
-            emb, k=8, iters=2, seed=42, assign_method="join"
-        )
-        c_arrow = clustering.kmeans_fit(
-            emb, k=8, iters=2, seed=42, assign_method="arrow"
-        )
-        assert c_join == c_arrow
-        a_join = sorted(
+        cents = clustering.kmeans_fit(emb, k=8, iters=2, seed=42)
+        got = sorted(
             map(tuple,
-                clustering.assign_clusters(
-                    emb, c_join, assign_method="join"
-                ).select("vec_id", "cluster", "dist2").collect())
+                clustering.assign_clusters(emb, cents)
+                .select("vec_id", "cluster", "dist2").collect())
         )
-        a_arrow = sorted(
-            map(tuple,
-                clustering.assign_clusters(
-                    emb, c_join, assign_method="arrow"
-                ).select("vec_id", "cluster", "dist2").collect())
+        want = sorted(
+            (int(r.vec_id), int(r.cluster), float(r.dist2))
+            for r in self._kmeans_oracle(k=8, final="assign").itertuples()
         )
-        assert a_join == a_arrow
-        assert clustering.ARROW_ASSIGN_MIN_K <= 64  # auto engages at scale
+        assert len(got) == len(want) > 0
+        assert [g[:2] for g in got] == [w[:2] for w in want]
+        assert np.allclose([g[2] for g in got], [w[2] for w in want], atol=1e-9)
 
-    def test_semdedup_pairs_arrow_join_parity(self, spark):
-        """The grouped-BLAS pairs stage must reproduce the self-join pairs
-        exactly: same (doc_id, dup_id, cosine) set under the round(…,4)
-        contract, at a threshold low enough to emit a non-trivial set."""
+    def test_semdedup_pairs_match_kmeans_oracle(self, spark):
+        """The grouped-BLAS pairs stage reproduces the oracle's
+        cluster-partitioned self-join (k=4, final='pairs'): the same
+        (doc_id, dup_id) set and round(…,4) cosines, at a threshold low
+        enough to emit a non-trivial set."""
         from py_evalfilter_spark.operators import clustering
 
         emb = spark.read.parquet(f"{SF}/embeddings.parquet")
         cents = clustering.kmeans_fit(emb, k=4, iters=2, seed=42)
-        got = {}
-        for m in ("join", "arrow"):
-            got[m] = sorted(
-                map(tuple,
-                    clustering.semdedup_pairs(
-                        emb, cents, threshold=0.2, pair_method=m
-                    ).collect())
-            )
-        assert len(got["join"]) > 0
-        assert got["join"] == got["arrow"]
+        got = sorted(
+            map(tuple, clustering.semdedup_pairs(emb, cents, threshold=0.2).collect())
+        )
+        want = sorted(
+            (int(r.doc_id), int(r.dup_id), float(r.cosine))
+            for r in self._kmeans_oracle(
+                k=4, final="pairs", threshold=0.2
+            ).itertuples()
+        )
+        assert len(got) == len(want) > 0
+        assert [g[:2] for g in got] == [w[:2] for w in want]
+        assert np.allclose([g[2] for g in got], [w[2] for w in want], atol=1e-9)
 
     def test_semdedup_pairs_tiled_parity(self, spark):
         """Tile-parallel pairs (per-bucket work split into exact ti<=tj
@@ -1032,8 +1044,7 @@ class TestClustering:
             got[ts] = sorted(
                 map(tuple,
                     clustering.semdedup_pairs(
-                        emb, cents, threshold=0.2,
-                        pair_method="arrow", tile_size=ts,
+                        emb, cents, threshold=0.2, tile_size=ts,
                     ).collect())
             )
         assert len(got[None]) > 0

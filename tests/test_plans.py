@@ -537,6 +537,39 @@ class TestBm25DoclenPlan:
             spark.sql(f"DROP TABLE IF EXISTS {prefix}_doclen")
 
 
+class TestSemanticClusteringPlan:
+    def test_kmeans_and_semdedup_run_only_arrow_kernels(self, spark, monkeypatch):
+        """q_semantic_cluster and q_semdedup build their plans after the
+        k-means fit's collects, so every collect's executed plan is recorded
+        along with the final query's.  None may cross-join vectors with
+        centroids (BroadcastNestedLoopJoin / CartesianProduct) or explode
+        vectors per dimension (Generate posexplode): the assign is one
+        ArrowEvalPython and the pairs one FlatMapGroupsInPandas."""
+        sf = "/root/testdata/sf0.001"
+        cls = type(spark.range(1))
+        real_collect = cls.collect
+        seen: list[str] = []
+
+        def collect(self):
+            rows = real_collect(self)
+            seen.append(_plan(self))
+            return rows
+
+        monkeypatch.setattr(cls, "collect", collect)
+        finals = {}
+        for name in ("q_semantic_cluster", "q_semdedup"):
+            df = getattr(dq, name)(spark, sf)
+            df.collect()
+            finals[name] = seen[-1]
+        assert len(seen) > 2 * len(finals), "fit collects were not recorded"
+        for plan in seen:
+            for node in ("BroadcastNestedLoopJoin", "CartesianProduct", "Generate posexplode"):
+                assert node not in plan, plan
+        assert "ArrowEvalPython" in finals["q_semantic_cluster"], finals
+        assert "ArrowEvalPython" in finals["q_semdedup"], finals
+        assert "FlatMapGroupsInPandas" in finals["q_semdedup"], finals
+
+
 class TestUdfProperties:
     def test_scalar_feature_udf_prunes_under_count(self, spark):
         t = dq.transcripts_df(spark, SF)
@@ -556,3 +589,13 @@ class TestUdfProperties:
         assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
         assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+
+    def test_default_driver_memory_is_half_ram(self, monkeypatch):
+        from py_evalfilter_spark import session
+
+        for ram_kib, want in ((16_479_424, "7g"), (2 * 1024**2, "2g"), (512 * 1024**2, "48g")):
+            monkeypatch.setattr(
+                session.os, "sysconf",
+                lambda name, kib=ram_kib: kib if name == "SC_PHYS_PAGES" else 1024,
+            )
+            assert session._default_driver_memory() == want
