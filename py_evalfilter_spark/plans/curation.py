@@ -1,27 +1,50 @@
 """End-to-end training-corpus curation: the operators of
-operators/corpus.py, operators/dedup.py, operators/graph.py and
-functions/{textanalysis,pii}.py composed into the pipeline a pretraining
-data job actually runs:
+operators/{bloom,corpus,dedup,graph}.py and functions/{textanalysis,pii}.py
+composed into the pipeline a pretraining data job actually runs:
 
-    quality filter → [linear classifier cut, optional] →
-    repetition filter → PII scrub → exact dedup →
-    MinHash-LSH near-dup clustering (keep one canonical doc per cluster) →
-    [semantic near-dup over the aligned embeddings table, optional] →
-    [exact substring-span removal, optional] →
-    benchmark decontamination → weighted source mixing → sequence packing
+    [ingest dedup against a standing corpus] → [C4 line/page rules] →
+    [Gopher quality rules] → quality filter → [linear classifier cut] →
+    repetition filter → PII scrub → [corpus-wide line dedup] →
+    exact dedup → MinHash-LSH near-dup clustering (keep one canonical doc
+    per cluster) → [semantic near-dup over the aligned embeddings table] →
+    [exact substring-span removal] → benchmark decontamination →
+    [weighted source mixing] → [exact per-source token budget] →
+    sequence packing                          ([…] = optional stage)
 
 Stage ordering is the cheap-to-expensive discipline: per-row JVM filters
 (quality, repetition thresholds, PII) shrink the corpus before the
 shuffle-bearing stages (exact dedup groupBy, LSH banding, component
 loop), and the benchmark/packing passes run on the smallest frame.
-Per-stage row counts ride the job as `observe` metrics — no extra
-actions.
+
+Each stage is built once, in one of three segment builders that match the
+durable boundaries: `_filtered` (ingest … line dedup), `_deduped` (exact …
+substring) and `_packed` (decontaminate … pack).  A builder takes the frame
+it starts from, the flow's options, an ``obs(df, stage)`` hook and a
+:class:`~py_evalfilter_spark.pinning.PinScope` (`_packed` pins nothing; it
+takes the documents table for the benchmark slice instead).  Two boundary
+strategies join the segments:
+
+* in memory (:func:`curate_corpus`): the segments chain into one lazy plan;
+  per-stage row counts ride its action as `observe` metrics (no extra
+  actions), and a segment's output is pinned because the next segment reads
+  it twice.
+* durable (:func:`curate_corpus_staged`): each segment is a parquet stage
+  written by tables.run_stage and resumed by its chained config
+  fingerprint; `obs` is a no-op and a segment's output, which only the
+  stage write reads, is not pinned.
+
+Pin rule: a frame is pinned where what follows reads it twice (a stats/
+survivor/pair derivation + the filtering join back).  Without the pins the
+scan→filter→scrub prefix recomputes multiplicatively down the chain —
+measured 75 s → 13 s at sf0.1.
 
 Reference analogue: this generalizes deduplicate_rants.py:7-31 (load →
 length filter → fuzzy dedup → save) to the corpus-scale curation flow.
 """
 
 from __future__ import annotations
+
+from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -31,6 +54,7 @@ from ..operators import bloom as bloom_ops
 from ..operators import corpus as corpus_ops
 from ..operators import dedup, graph
 from ..pinning import PinScope
+from ..sources import tables
 
 
 def input_partitions(spark: SparkSession) -> int:
@@ -50,70 +74,186 @@ def _quality_filter(df: DataFrame, quality_min: float) -> DataFrame:
     )
 
 
-def _semantic_dedup(
-    spark: SparkSession,
-    sf_dir: str,
-    df: DataFrame,
-    threshold: float,
-    ids_df: DataFrame | None = None,
-    pins: PinScope | None = None,
+def _documents(o: SimpleNamespace) -> DataFrame:
+    return o.spark.read.parquet(f"{o.sf_dir}/documents.parquet")
+
+
+def _filtered(
+    docs: DataFrame, o: SimpleNamespace, obs, pins: PinScope, pin_out: bool
 ) -> DataFrame:
-    """Hyperplane-blocked cosine pairs over the vec_id-aligned embeddings
-    table, restricted to surviving docs, then cluster-and-keep-canonical —
-    catches paraphrase-level dups lexical MinHash can't.
-
-    `ids_df`: frame to derive the surviving-id set from (defaults to `df`).
-    Callers that attach an observe() metric to `df` pass the UNOBSERVED
-    twin here: the pair lineage is executed eagerly by the component loop,
-    and an observed node first-completed through those internal jobs can
-    deliver a schema-less metrics row that poisons the Observation —
-    keeping the observed node exclusively on the final output path gives
-    it exactly one clean completion."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # probe the vector dimension from the RAW embeddings table (a one-row
-    # read), NOT through the curation lineage — leaving dim to the operator
-    # would run .first() on `vecs`, eagerly executing the whole upstream
-    # pipeline during plan construction
-    head = emb.select(F.size("embedding").alias("d")).first()
-    vecs = emb.select(F.col("vec_id").alias("doc_id"), "embedding").join(
-        (ids_df if ids_df is not None else df).select("doc_id"),
-        "doc_id",
-        "left_semi",
+    """Segment 1, the documents table → ingest dedup, C4, Gopher, quality,
+    classifier, repetition, PII scrub, line dedup.  `pin_out`: the caller
+    reads the output twice."""
+    df = obs(
+        docs.filter(F.col("source") != o.benchmark_source).repartition(
+            input_partitions(o.spark)
+        ),
+        "input",
     )
-    spairs = dedup.embedding_neardup_pairs(
-        vecs, "doc_id", "embedding", threshold=threshold,
-        dim=head["d"] if head else None, pins=pins,
-    )
-    return graph.dedup_keep_canonical(df, spairs, src="doc_id", dst="dup_id")
+    # 0a (optional): ingest dedup against an already-curated STANDING
+    # corpus (the daily-crawl regime: never re-process what's already
+    # landed).  Bloom prefilter (operators/bloom): the standing side is
+    # read map-side into an m-bit filter and only the Bloom-positive sliver
+    # enters the exact confirm join.  FIRST of all stages: every downstream
+    # filter/shuffle sees only genuinely-new rows.
+    if o.standing is not None:
+        # EAGERLY localCheckpoint'ed, not persisted: its lineage (probe UDF
+        # union + the confirm join) is consumed multiply downstream, and
+        # lazy persists neither dedupe concurrent subtree execution inside
+        # one action nor survive eviction — measured +190 s at 1M in memory
+        # and 782 s vs ~95 s for the staged build.  The checkpoint also
+        # gives the input/ingest observations their one clean completion.
+        # The probe pin is operator-internal (one probe pass for both union
+        # branches) and releases as soon as the checkpoint lands.
+        ingest_pins = PinScope()
+        df = pins.pin_local_checkpoint(
+            obs(
+                bloom_ops.bloom_dedup_against(
+                    df, o.standing.select("text"), "text", fp_rate=1e-3,
+                    n_standing=o.standing_count, pins=ingest_pins,
+                ),
+                "ingest_dedup",
+            )
+        )
+        ingest_pins.release()
+    # 0 (optional): the published structural cleanups — C4's line/page
+    # rules and Gopher's doc-quality rules, both MAP-ONLY
+    if o.c4_rules:
+        df = obs(
+            corpus_ops.c4_filter(df)
+            .filter(F.col("keep"))
+            .drop("n_lines_kept", "n_sentences", "keep"),
+            "c4",
+        )
+    if o.gopher_min_words is not None:
+        gq_kw = {"min_words": o.gopher_min_words}
+        if o.gopher_stopwords is not None:
+            gq_kw["stopwords"] = o.gopher_stopwords
+        df = obs(
+            corpus_ops.gopher_quality(df, **gq_kw)
+            .filter(F.col("keep"))
+            .drop(
+                "n_words", "mean_word_len", "symbol_ratio",
+                "alpha_word_frac", "stopword_hits", "keep",
+            ),
+            "gopher",
+        )
+    # 1-2: per-row quality + repetition filters; the classifier (1b, the
+    # GPT-3/CCNet model-based cut) and the repetition filter both read
+    # their input twice (score/stats + semi/anti join back)
+    quality = pins.pin(obs(_quality_filter(df, o.quality_min), "quality"))
+    if o.classifier_min is not None:
+        quality = obs(
+            textanalysis.filter_by_classifier(quality, threshold=o.classifier_min),
+            "classifier",
+        )
+    # 3: PII scrub (counts kept as features, text redacted in place)
+    out = pii.scrub_pii(obs(corpus_ops.filter_repetitive(quality), "repetition"))
+    # 3b (optional): CCNet corpus-wide line dedup — kills cross-page
+    # boilerplate BEFORE doc-level dedup.  It scans its input twice (line
+    # marks + per-doc rebuild).  With a STANDING corpus the incremental
+    # form runs instead: lines the standing corpus already owns drop too,
+    # ≡ dedup_lines(standing ∪ shard) restricted to shard rows.
+    if o.line_dedup:
+        out = pins.pin(out)
+        ld = (
+            corpus_ops.dedup_lines_against(out, o.standing.select("text"))
+            if o.standing is not None
+            else corpus_ops.dedup_lines(out)
+        )
+        out = obs(ld.drop("n_lines_kept", "n_lines_dropped"), "line_dedup")
+    return pins.pin(out) if pin_out else out
 
 
-def _lexical_dedup(
-    df: DataFrame,
-    threshold: float,
-    pin=lambda d, name: d,
-    pins: PinScope | None = None,
+def _deduped(
+    df: DataFrame, o: SimpleNamespace, obs, pins: PinScope, pin_out: bool
 ) -> DataFrame:
-    """Exact dedup (min doc_id per distinct text) + word-shingle MinHash
-    clustering with one canonical doc kept per component — shared by the
-    in-memory and staged flows.  `pin(frame, name)` interposes the caller's
-    observe/persist at the two multiply-consumed boundaries
-    ('exact_dedup', 'near_dedup')."""
+    """Segment 2: exact dedup (min doc_id per distinct text) → MinHash
+    clustering → semantic near-dup → substring-span removal.  Pairs chain
+    A~B, B~C, so one canonical doc per component is kept instead of
+    dropping pair-wise.  `pin_out`: the caller reads the output twice."""
+    sem, sub = o.semantic_threshold is not None, o.substring_n is not None
     survivors = dedup.exact_dedup(df, ["text"], "doc_id").select(
         F.col("keep_id").alias("doc_id")
     )
-    exact = pin(df.join(survivors, "doc_id", "left_semi"), "exact_dedup")
+    exact = pins.pin(obs(df.join(survivors, "doc_id", "left_semi"), "exact_dedup"))
     # unit="word": these corpora draw from a small vocabulary, where char
     # shingle sets coincide across unrelated docs and flood the LSH buckets
     # (measured 5.2M candidates → 214 true pairs at sf0.1 with char
     # shingles); word shingles keep the space discriminative
     pairs = dedup.minhash_lsh_pairs(
-        df=exact, id_col="doc_id", text_col="text", threshold=threshold,
+        df=exact, id_col="doc_id", text_col="text", threshold=o.minhash_threshold,
         unit="word", pins=pins,
     )
-    return pin(
-        graph.dedup_keep_canonical(exact, pairs, src="doc_id", dst="dup_id"),
-        "near_dedup",
+    near = graph.dedup_keep_canonical(exact, pairs, src="doc_id", dst="dup_id")
+    if sem or sub or pin_out:
+        near = pins.pin(near)
+    # the observation attaches AFTER the pin: the semantic stage's eager
+    # pair jobs run on the unobserved twin
+    out = obs(near, "near_dedup")
+    # 5b (optional): SEMANTIC near-dup — the same cluster-then-keep-canonical
+    # shape over vec_id-aligned embeddings; catches paraphrase-level dups
+    # lexical MinHash can't
+    if sem:
+        emb = o.spark.read.parquet(f"{o.sf_dir}/embeddings.parquet")
+        # probe the vector dimension from the RAW embeddings table (a
+        # one-row read): through the curation lineage .first() would run
+        # the whole upstream pipeline during plan construction
+        head = emb.select(F.size("embedding").alias("d")).first()
+        # ids from the unobserved twin: the pair jobs must not be the first
+        # to complete an observed node (its metrics row can come back empty)
+        vecs = emb.select(F.col("vec_id").alias("doc_id"), "embedding").join(
+            near.select("doc_id"), "doc_id", "left_semi"
+        )
+        spairs = dedup.embedding_neardup_pairs(
+            vecs, "doc_id", "embedding", threshold=o.semantic_threshold,
+            dim=head["d"] if head else None, pins=pins,
+        )
+        out = obs(
+            graph.dedup_keep_canonical(out, spairs, src="doc_id", dst="dup_id"),
+            "semantic_dedup",
+        )
+        if sub or pin_out:
+            out = pins.pin(out)
+    # 5c (optional): exact substring dedup — remove duplicated word spans
+    # that survive doc-level dedup (Lee et al. 2021's ExactSubstr-cut:
+    # doc-level near-dup drops COPIES, this trims shared BOILERPLATE),
+    # before decontamination (the trimmed text is what must be clean)
+    if sub:
+        out = obs(
+            corpus_ops.remove_duplicate_spans(out, n=o.substring_n).drop(
+                "n_words_kept"
+            ),
+            "substring_dedup",
+        )
+        if pin_out:
+            out = pins.pin(out)
+    return out
+
+
+def _packed(df: DataFrame, docs: DataFrame, o: SimpleNamespace, obs) -> DataFrame:
+    """Segment 3: decontamination against the documents table's benchmark
+    slice → weighted mixing → exact per-source token budget → packing into
+    fixed-token-budget windows."""
+    benchmark = docs.filter(F.col("source") == o.benchmark_source)
+    out = obs(
+        corpus_ops.decontaminate(df, benchmark, n=o.decontam_n), "decontaminate"
     )
+    if o.rates:
+        out = obs(corpus_ops.mix_sources(out, o.rates), "mix")
+    # EXACT per-source token budget (chars as the token proxy, same as
+    # pack_sequences): rate-based mixing hits budgets in expectation, this
+    # caps them exactly (bucketed cumsum, no per-source global sort)
+    if o.source_token_budget is not None:
+        budgets = (
+            out.select("source").distinct()
+            .withColumn("token_budget", F.lit(o.source_token_budget))
+        )
+        out = obs(
+            corpus_ops.sample_to_token_budget(out, budgets, tokens_col="n_chars"),
+            "token_budget",
+        )
+    return corpus_ops.pack_sequences(out, budget=o.budget)
 
 
 def curate_corpus(
@@ -145,205 +285,22 @@ def curate_corpus(
     (read `.get` after an action on the result).  Pass a
     :class:`~py_evalfilter_spark.pinning.PinScope` to own eviction of the
     stage-boundary persists: release it after materializing the result and
-    storage memory returns to baseline."""
-    from ..pinning import pin as _p
+    storage memory returns to baseline.  Without one the pins go to a
+    private scope that is never released: they stay in the session cache
+    under LRU."""
+    o = SimpleNamespace(**locals())
 
     def obs(df: DataFrame, stage: str) -> DataFrame:
         if observations is None:
             return df
-        o = Observation(stage)
-        observations[stage] = o
-        return df.observe(o, F.count(F.lit(1)).alias("rows"))
+        observations[stage] = Observation(stage)
+        return df.observe(observations[stage], F.count(F.lit(1)).alias("rows"))
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    benchmark = docs.filter(F.col("source") == benchmark_source)
-    corpus = obs(
-        docs.filter(F.col("source") != benchmark_source).repartition(
-            input_partitions(spark)
-        ),
-        "input",
-    )
-
-    # Persistence discipline: the dedup stages consume their input TWICE
-    # (a stats/survivor/pair derivation + the filtering join back), so
-    # without pinning each boundary the scan→filter→scrub prefix recomputes
-    # multiplicatively down the chain — measured 75 s → 13 s at sf0.1.  In
-    # a 100 TB job the same boundaries are durable stage outputs
-    # (tables.run_stage parquet checkpoints); in-memory persist is the
-    # single-job equivalent.  Eviction: the `pins` scope (pinning.py);
-    # without one, frames stay in the session cache under LRU.
-
-    # 0a (optional): ingest dedup against an already-curated STANDING
-    # corpus (the daily-crawl regime: never re-process what's already
-    # landed).  Bloom prefilter (operators/bloom) — the standing side is
-    # read map-side into an m-bit filter, probes are map-side, and only
-    # the Bloom-positive sliver (true re-ingests + ~1e-3 FPs) enters the
-    # exact confirm join — so the stage costs one standing key-column
-    # scan, not a corpus×shard shuffle.  FIRST of all stages: every
-    # downstream filter/shuffle sees only genuinely-new rows.
-    if standing is not None:
-        # The stage output is EAGERLY localCheckpoint'ed, not persisted:
-        # its lineage (probe UDF union + the confirm join's standing-wide
-        # SMJ) must never re-execute, and with plain persists it did —
-        # under the 13-stage pipeline's storage pressure the cached
-        # boundary evicts and the prefix recomputes multiplicatively
-        # (measured: +190 s at 1M vs +9 s for the stage alone; the
-        # checkpoint also gives the input/ingest observations their one
-        # clean completion — lazily-cached runs lost those metric rows).
-        # The probe pin is operator-internal (one probe pass for both
-        # union branches) and releases as soon as the checkpoint lands.
-        ingest_pins = PinScope()
-        staged_out = obs(
-            bloom_ops.bloom_dedup_against(
-                corpus, standing.select("text"), "text",
-                fp_rate=1e-3, n_standing=standing_count, pins=ingest_pins,
-            ),
-            "ingest_dedup",
-        )
-        corpus = (
-            pins.pin_local_checkpoint(staged_out)
-            if pins is not None
-            else staged_out.localCheckpoint(eager=True)
-        )
-        ingest_pins.release()
-
-    # 0 (optional): the published structural cleanups — C4's line/page
-    # rules and Gopher's doc-quality rules.  Both are MAP-ONLY, so they
-    # run before anything that shuffles: every Exchange downstream sees
-    # fewer, cleaner rows.
-    if c4_rules:
-        corpus = obs(
-            corpus_ops.c4_filter(corpus)
-            .filter(F.col("keep"))
-            .drop("n_lines_kept", "n_sentences", "keep"),
-            "c4",
-        )
-    if gopher_min_words is not None:
-        gq_kw = {"min_words": gopher_min_words}
-        if gopher_stopwords is not None:
-            gq_kw["stopwords"] = gopher_stopwords
-        corpus = obs(
-            corpus_ops.gopher_quality(corpus, **gq_kw)
-            .filter(F.col("keep"))
-            .drop(
-                "n_words", "mean_word_len", "symbol_ratio",
-                "alpha_word_frac", "stopword_hits", "keep",
-            ),
-            "gopher",
-        )
-
-    # 1-2: per-row quality + repetition filters (JVM expressions / one
-    # tagged explode) — run FIRST so every later shuffle sees fewer rows
-    quality = _p(obs(_quality_filter(corpus, quality_min), "quality"), pins)
-
-    # 1b (optional): model-based quality cut — the fastText-shape linear
-    # classifier (the GPT-3/CCNet pipeline's second quality gate after the
-    # heuristic one); semi-join keeps the full doc schema
-    if classifier_min is not None:
-        quality = obs(
-            textanalysis.filter_by_classifier(quality, threshold=classifier_min),
-            "classifier",
-        )
-    repeated = obs(corpus_ops.filter_repetitive(quality), "repetition")
-
-    # 3: PII scrub (counts kept as features, text redacted in place)
-    scrubbed = _p(pii.scrub_pii(repeated), pins)
-
-    # 3b (optional): CCNet corpus-wide line dedup — kills cross-page
-    # boilerplate BEFORE doc-level dedup so exact/MinHash stages compare
-    # the residual content, not shared headers.  Text crosses the wire
-    # once (operators/corpus.dedup_lines plan notes); pinned because the
-    # dedup stages below consume their input twice.  With a STANDING
-    # corpus the incremental form runs instead: lines already owned by
-    # the standing corpus drop too (the daily-crawl regime — the batch
-    # form would happily re-admit standing boilerplate the ingest stage's
-    # whole-doc dedup can't see), ≡ dedup_lines(standing ∪ shard)
-    # restricted to shard rows, and the standing side is never shuffled
-    # (line-key Bloom + confirm on the positive sliver only).
-    if line_dedup:
-        ld = (
-            corpus_ops.dedup_lines_against(scrubbed, standing.select("text"))
-            if standing is not None
-            else corpus_ops.dedup_lines(scrubbed)
-        )
-        scrubbed = _p(
-            obs(ld.drop("n_lines_kept", "n_lines_dropped"), "line_dedup"),
-            pins,
-        )
-
-    # 4-5: exact dedup + MinHash near-dup clustering (shared _lexical_dedup;
-    # pairs chain A~B, B~C, so one canonical doc per component is kept
-    # instead of dropping pair-wise).  The near_dedup observation attaches
-    # AFTER the persist boundary so the semantic stage's eager pair jobs
-    # run on the unobserved twin (see _semantic_dedup docstring).
-    neardup_raw = _lexical_dedup(
-        scrubbed,
-        minhash_threshold,
-        pin=lambda d, name: (
-            _p(obs(d, name), pins) if name == "exact_dedup" else _p(d, pins)
-        ),
-        pins=pins,
-    )
-    neardup = obs(neardup_raw, "near_dedup")
-
-    # 5b (optional): SEMANTIC near-dup — same cluster-then-keep-canonical
-    # shape over the embeddings table (_semantic_dedup)
-    if semantic_threshold is not None:
-        neardup = _p(
-            obs(
-                _semantic_dedup(
-                    spark, sf_dir, neardup, semantic_threshold,
-                    ids_df=neardup_raw, pins=pins,
-                ),
-                "semantic_dedup",
-            ),
-            pins,
-        )
-
-    # 5c (optional): exact substring dedup — remove duplicated word spans
-    # that survive doc-level dedup (Lee et al. 2021's ExactSubstr-cut;
-    # doc-level near-dup drops COPIES, this trims shared BOILERPLATE).
-    # After the doc-level stages (fewer rows), before decontamination
-    # (the trimmed text is what must be benchmark-clean).
-    if substring_n is not None:
-        neardup = _p(
-            obs(
-                corpus_ops.remove_duplicate_spans(neardup, n=substring_n).drop(
-                    "n_words_kept"
-                ),
-                "substring_dedup",
-            ),
-            pins,
-        )
-
-    # 6: decontamination against the held-out benchmark slice
-    clean = obs(
-        corpus_ops.decontaminate(neardup, benchmark, n=decontam_n), "decontaminate"
-    )
-
-    # 7: optional weighted mixing
-    mixed = (
-        obs(corpus_ops.mix_sources(clean, rates), "mix") if rates else clean
-    )
-
-    # 7b (optional): EXACT per-source token budget (chars as the token
-    # proxy, same as pack_sequences) — rate-based mixing hits budgets in
-    # expectation, this caps them exactly (corpus.sample_to_token_budget's
-    # bucketed cumsum, no per-source global sort)
-    if source_token_budget is not None:
-        budgets = (
-            mixed.select("source").distinct()
-            .withColumn("token_budget", F.lit(source_token_budget))
-        )
-        mixed = obs(
-            corpus_ops.sample_to_token_budget(
-                mixed, budgets, tokens_col="n_chars"
-            ),
-            "token_budget",
-        )
-
-    # 8: pack into fixed-token-budget training windows
-    return corpus_ops.pack_sequences(mixed, budget=budget)
+    # one read of the documents table: each read costs a schema job
+    docs = _documents(o)
+    scope = pins if pins is not None else PinScope()
+    filtered = _filtered(docs, o, obs, scope, pin_out=True)
+    return _packed(_deduped(filtered, o, obs, scope, pin_out=True), docs, o, obs)
 
 
 def curation_stream_filters(
@@ -388,15 +345,21 @@ def curate_corpus_staged(
     standing_path: str | None = None,
     n_shards: int | None = None,
 ) -> tuple[DataFrame, dict]:
-    """Durable, resumable curation: the same flow as :func:`curate_corpus`
-    split into manifest-checkpointed stages (tables.run_stage — the
+    """Durable, resumable curation: the segments of :func:`curate_corpus`
+    as manifest-checkpointed parquet stages (tables.run_stage — the
     flagship pipeline's resume discipline):
 
-      filtered  quality + repetition + PII scrub
-      deduped   exact dedup + MinHash clustering (+ optional semantic)
-      packed    decontamination + mixing + packing
+      filtered  ingest dedup against `standing_path` + C4 + Gopher +
+                quality + classifier + repetition + PII scrub + line dedup
+      deduped   exact dedup + MinHash clustering + semantic near-dup +
+                substring-span removal
+      packed    decontamination + mixing + token budget + packing
       sharded   (n_shards set) terminal corpus assembly — shard_corpus
                 realized as one ORDERED parquet file per training shard
+
+    Optional stages run as in :func:`curate_corpus`.  No per-stage
+    Observations are recorded; the ingest stage counts `standing_path`
+    for its Bloom sizing.
 
     A rerun after a mid-job failure recomputes ONLY stages whose outputs
     are missing or whose config fingerprint changed (e.g. a new `budget`
@@ -404,20 +367,16 @@ def curate_corpus_staged(
     upstream stage's fingerprint, so changing an upstream parameter (e.g.
     `quality_min` or `minhash_threshold`) invalidates every downstream
     stage too — without the chain, a downstream stage whose own params
-    were unchanged would silently resume a stale output.  At 100 TB each
-    boundary is a parquet dataset, so the in-memory persist discipline of
-    curate_corpus is replaced by durable storage.  Returns
-    (packed df, {stage: manifest}); each manifest carries a `resumed`
-    flag."""
-    from ..sources import tables
-
+    were unchanged would silently resume a stale output.  Returns
+    (last stage's df, {stage: manifest}); each manifest carries a
+    `resumed` flag and the sharded one a per-shard row rollup."""
+    o = SimpleNamespace(**locals(), standing=None, standing_count=None)
     docs_path = f"{sf_dir}/documents.parquet"
     manifests: dict[str, dict] = {}
 
     # Stage-internal persists release as soon as run_stage returns: the
     # stage output is durable parquet by then, so the intermediates are
-    # dead weight — unlike the in-memory flow, the staged flow has a
-    # natural eviction boundary and never accumulates cache across stages.
+    # dead weight — the staged flow never accumulates cache across stages.
     stage_pins = PinScope()
 
     def stage(
@@ -434,72 +393,13 @@ def curate_corpus_staged(
         manifests[name] = {**m, "resumed": skipped}
         return df
 
+    def no_obs(df: DataFrame, stage: str) -> DataFrame:
+        return df
+
     def build_filtered() -> DataFrame:
-        docs = spark.read.parquet(docs_path)
-        corpus = docs.filter(F.col("source") != benchmark_source).repartition(
-            input_partitions(spark)
-        )
         if standing_path is not None:
-            # eager-checkpointed like the in-memory flow: the stage WRITE
-            # is one action, but its plan consumes this union subtree
-            # multiply (line-dedup's two scans × the union's two
-            # branches), and lazy persists don't dedupe concurrent
-            # subtree execution within the action — measured 782 s for
-            # the 13-stage 'filtered' build vs ~95 s with the lineage
-            # truncated here and scrubbed pinned below
-            ingest_pins = PinScope()
-            corpus = stage_pins.pin_local_checkpoint(
-                bloom_ops.bloom_dedup_against(
-                    corpus,
-                    spark.read.parquet(standing_path).select("text"),
-                    "text",
-                    fp_rate=1e-3,
-                    pins=ingest_pins,
-                )
-            )
-            ingest_pins.release()
-        if c4_rules:
-            corpus = (
-                corpus_ops.c4_filter(corpus)
-                .filter(F.col("keep"))
-                .drop("n_lines_kept", "n_sentences", "keep")
-            )
-        if gopher_min_words is not None:
-            gq_kw = {"min_words": gopher_min_words}
-            if gopher_stopwords is not None:
-                gq_kw["stopwords"] = gopher_stopwords
-            corpus = (
-                corpus_ops.gopher_quality(corpus, **gq_kw)
-                .filter(F.col("keep"))
-                .drop(
-                    "n_words", "mean_word_len", "symbol_ratio",
-                    "alpha_word_frac", "stopword_hits", "keep",
-                )
-            )
-        quality = _quality_filter(corpus, quality_min)
-        if classifier_min is not None:
-            quality = textanalysis.filter_by_classifier(
-                quality, threshold=classifier_min
-            )
-        scrubbed = pii.scrub_pii(corpus_ops.filter_repetitive(quality))
-        if line_dedup:
-            # line dedup scans its input twice (line marks + per-doc
-            # rebuild): pin the scrubbed prefix so those scans don't each
-            # re-execute the classifier/quality/ingest chain — the same
-            # twice-consumed-boundary rule the in-memory flow applies
-            scrubbed = stage_pins.pin(scrubbed)
-            ld = (
-                corpus_ops.dedup_lines_against(
-                    scrubbed,
-                    spark.read.parquet(standing_path).select("text"),
-                )
-                if standing_path is not None
-                else corpus_ops.dedup_lines(scrubbed)
-            )
-            scrubbed = stage_pins.pin(
-                ld.drop("n_lines_kept", "n_lines_dropped")
-            )
-        return scrubbed
+            o.standing = spark.read.parquet(standing_path)
+        return _filtered(_documents(o), o, no_obs, stage_pins, pin_out=False)
 
     filtered_cfg = {
         "quality_min": quality_min,
@@ -517,28 +417,6 @@ def curate_corpus_staged(
         # combination without touching any other config's fingerprint
         filtered_cfg["line_dedup_mode"] = "against_standing"
     filtered = stage("filtered", filtered_cfg, build_filtered)
-
-    def build_deduped() -> DataFrame:
-        # pin BOTH multiply-consumed boundaries (exact_dedup, near_dedup)
-        # like the in-memory flow: the substring stage below consumes the
-        # near-dedup output twice (gram marks + rebuild join)
-        out = _lexical_dedup(
-            filtered, minhash_threshold,
-            pin=lambda d, name: stage_pins.pin(d),
-            pins=stage_pins,
-        )
-        if semantic_threshold is not None:
-            out = _semantic_dedup(
-                spark, sf_dir, out, semantic_threshold, pins=stage_pins
-            )
-        if substring_n is not None:
-            out = stage_pins.pin(
-                corpus_ops.remove_duplicate_spans(out, n=substring_n).drop(
-                    "n_words_kept"
-                )
-            )
-        return out
-
     deduped = stage(
         "deduped",
         {
@@ -547,25 +425,8 @@ def curate_corpus_staged(
             "semantic_threshold": semantic_threshold,
             "substring_n": substring_n,
         },
-        build_deduped,
+        lambda: _deduped(filtered, o, no_obs, stage_pins, pin_out=False),
     )
-
-    def build_packed() -> DataFrame:
-        benchmark = spark.read.parquet(docs_path).filter(
-            F.col("source") == benchmark_source
-        )
-        clean = corpus_ops.decontaminate(deduped, benchmark, n=decontam_n)
-        mixed = corpus_ops.mix_sources(clean, rates) if rates else clean
-        if source_token_budget is not None:
-            budgets = (
-                mixed.select("source").distinct()
-                .withColumn("token_budget", F.lit(source_token_budget))
-            )
-            mixed = corpus_ops.sample_to_token_budget(
-                mixed, budgets, tokens_col="n_chars"
-            )
-        return corpus_ops.pack_sequences(mixed, budget=budget)
-
     packed = stage(
         "packed",
         {
@@ -576,7 +437,7 @@ def curate_corpus_staged(
             "source_token_budget": source_token_budget,
             "budget": budget,
         },
-        build_packed,
+        lambda: _packed(deduped, _documents(o), o, no_obs),
     )
     if n_shards is None:
         return packed, manifests
@@ -616,10 +477,12 @@ def curate_corpus_staged(
             k = int(p["file"].split("/", 1)[0].split("=", 1)[1])
             shards[k] = shards.get(k, 0) + p["rows"]
     # a layout mismatch (e.g. a partition entry that fell back to a bare
-    # basename) must fail loudly, not ship a short rollup (ADVICE r7)
-    assert sum(shards.values()) == manifests["sharded"]["rows"], (
-        "shard rollup undercounts the stage manifest: "
-        f"{sum(shards.values())} != {manifests['sharded']['rows']}"
-    )
+    # basename) must fail loudly, not ship a short rollup (ADVICE r7) —
+    # a raise, not an assert, so `python -O` keeps the check
+    if sum(shards.values()) != manifests["sharded"]["rows"]:
+        raise RuntimeError(
+            "shard rollup undercounts the stage manifest: "
+            f"{sum(shards.values())} != {manifests['sharded']['rows']}"
+        )
     manifests["sharded"]["shards"] = {str(k): shards[k] for k in sorted(shards)}
     return sharded, manifests

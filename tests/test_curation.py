@@ -198,51 +198,60 @@ class TestStagedCuration:
         assert not m2["packed"]["resumed"]
 
 
+def _assert_staged_equals_in_memory(spark, out: str, kw: dict) -> None:
+    """Both execution modes produce the identical corpus — including the
+    REWRITTEN text, which doc_id equality alone would not check."""
+    packed, _ = curation.curate_corpus_staged(spark, SF, out, **kw)
+    staged = sorted(
+        (r["doc_id"], r["text"]) for r in packed.select("doc_id", "text").collect()
+    )
+    mem = sorted(
+        (r["doc_id"], r["text"])
+        for r in curation.curate_corpus(spark, SF, **kw)
+        .select("doc_id", "text")
+        .collect()
+    )
+    assert staged == mem and len(staged) > 0
+
+
 class TestExtendedStages:
     def test_staged_equals_in_memory_with_classifier_and_substring(
         self, spark, tmp_path
     ):
         """The r5 optional stages (classifier cut, exact-substring removal)
-        must produce the identical corpus through both execution modes —
-        including the REWRITTEN text, which doc_id equality alone would
-        not check."""
-        kw = dict(budget=256, classifier_min=0.4, substring_n=8)
-        out = str(tmp_path / "curated_ext")
-        packed, m = curation.curate_corpus_staged(spark, SF, out, **kw)
-        staged = sorted(
-            (r["doc_id"], r["text"]) for r in packed.select("doc_id", "text").collect()
+        through both execution modes."""
+        _assert_staged_equals_in_memory(
+            spark, str(tmp_path / "curated_ext"),
+            dict(budget=256, classifier_min=0.4, substring_n=8),
         )
-        mem = sorted(
-            (r["doc_id"], r["text"])
-            for r in curation.curate_corpus(spark, SF, **kw)
-            .select("doc_id", "text")
-            .collect()
+
+    def test_staged_equals_in_memory_with_semantic_and_substring(
+        self, spark, tmp_path
+    ):
+        """The same with the semantic stage on: the substring stage reads
+        the semantic stage's output twice."""
+        _assert_staged_equals_in_memory(
+            spark, str(tmp_path / "curated_sem"),
+            dict(
+                budget=256, classifier_min=0.4, substring_n=8,
+                semantic_threshold=0.95,
+            ),
         )
-        assert staged == mem and len(staged) > 0
 
     def test_staged_equals_in_memory_with_r6_stages(self, spark, tmp_path):
         """The r6 optional stages (Gopher quality, line dedup, exact
-        source token budget) must produce the identical corpus through
-        both execution modes — including line-dedup's rewritten text."""
-        kw = dict(
-            budget=256,
-            gopher_min_words=10,
-            gopher_stopwords=("the", "a", "table", "value", "row", "scan"),
-            line_dedup=True,
-            source_token_budget=4000,
+        source token budget) through both execution modes — including
+        line-dedup's rewritten text."""
+        _assert_staged_equals_in_memory(
+            spark, str(tmp_path / "curated_r6"),
+            dict(
+                budget=256,
+                gopher_min_words=10,
+                gopher_stopwords=("the", "a", "table", "value", "row", "scan"),
+                line_dedup=True,
+                source_token_budget=4000,
+            ),
         )
-        out = str(tmp_path / "curated_r6")
-        packed, m = curation.curate_corpus_staged(spark, SF, out, **kw)
-        staged = sorted(
-            (r["doc_id"], r["text"]) for r in packed.select("doc_id", "text").collect()
-        )
-        mem = sorted(
-            (r["doc_id"], r["text"])
-            for r in curation.curate_corpus(spark, SF, **kw)
-            .select("doc_id", "text")
-            .collect()
-        )
-        assert staged == mem and len(staged) > 0
 
     def test_ingest_dedup_drops_standing_and_modes_agree(self, spark, tmp_path):
         """The 0a ingest-dedup stage (Bloom prefilter against a standing

@@ -5,6 +5,7 @@ becomes tested behavior: re-read order is the training order, the per-shard
 manifest covers every packed row exactly once, and the stage participates in
 the kill-resume discipline (only the missing stage recomputes)."""
 
+import json
 import os
 import shutil
 import sys
@@ -15,6 +16,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from py_evalfilter_spark.plans import curation
+from py_evalfilter_spark.sources import tables
 
 SF = "/root/testdata/sf0.01"
 N_SHARDS = 4
@@ -28,7 +30,41 @@ def sharded_run(spark, tmp_path_factory):
     return out, df, m
 
 
+# The stage config fingerprints of a default run, byte for byte: a manifest
+# resumes only when its stored fingerprint string equals the one the flow
+# computes, so any drift here silently recomputes every existing output.
+# Each stage chains its upstream's fingerprint as a JSON string.
+FILTERED_FP = (
+    '{"benchmark_source": "src0", "c4_rules": false, "classifier_min": null, '
+    '"gopher_min_words": null, "gopher_stopwords": [], "line_dedup": false, '
+    '"quality_min": 0.5, "standing_path": null}'
+)
+DEDUPED_FP = (
+    '{"minhash_threshold": 0.8, "semantic_threshold": null, '
+    '"substring_n": null, "upstream": ' + json.dumps(FILTERED_FP) + "}"
+)
+PACKED_FP = (
+    '{"benchmark_source": "src0", "budget": 256, "decontam_n": 6, '
+    '"rates": null, "source_token_budget": null, "upstream": '
+    + json.dumps(DEDUPED_FP) + "}"
+)
+SHARDED_FP = '{"n_shards": 4, "upstream": ' + json.dumps(PACKED_FP) + "}"
+
+
 class TestShardedStage:
+    def test_config_fingerprints_are_stable(self, sharded_run):
+        """Manifests written by earlier versions must still resume."""
+        _, _, m = sharded_run
+        assert {
+            s: m[s]["config_fingerprint"]
+            for s in ("filtered", "deduped", "packed", "sharded")
+        } == {
+            "filtered": FILTERED_FP,
+            "deduped": DEDUPED_FP,
+            "packed": PACKED_FP,
+            "sharded": SHARDED_FP,
+        }
+
     def test_manifest_covers_packed_exactly(self, spark, sharded_run):
         out, df, m = sharded_run
         assert "sharded" in m and m["sharded"]["resumed"] is False
@@ -97,6 +133,29 @@ class TestShardedStage:
         assert sum(m2["sharded"]["shards"].values()) == m["packed"]["rows"]
         # restore the module fixture's layout for any later test
         curation.curate_corpus_staged(spark, SF, out, **KW)
+
+    def test_rollup_mismatch_raises(self, spark, sharded_run, monkeypatch):
+        """A sharded manifest whose partition entries fell back to bare
+        basenames must fail loudly, not return a short rollup — with a
+        raise that `python -O` keeps."""
+        out, _, _ = sharded_run
+        real = tables.run_stage
+
+        def bare_basenames(spark, path, stage, build_fn, **kw):
+            df, m, skipped = real(spark, path, stage, build_fn, **kw)
+            if stage == "sharded":
+                m = {
+                    **m,
+                    "partitions": [
+                        {**p, "file": p["file"].rsplit("/", 1)[-1]}
+                        for p in m["partitions"]
+                    ],
+                }
+            return df, m, skipped
+
+        monkeypatch.setattr(tables, "run_stage", bare_basenames)
+        with pytest.raises(RuntimeError, match="shard rollup undercounts"):
+            curation.curate_corpus_staged(spark, SF, out, **KW)
 
     def test_upstream_change_invalidates_sharded(self, spark, tmp_path):
         out = str(tmp_path / "curated")

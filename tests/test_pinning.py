@@ -39,20 +39,32 @@ class TestPinScope:
         # blocking unpersist happened via scope exit; storage back to baseline
         assert _cached_rdd_count(spark) <= base
 
-    def test_curation_pins_release_to_baseline(self, spark):
+    def _assert_curation_pins_release(self, spark, n_pins: int, **kw) -> None:
         spark.catalog.clearCache()
         base = _cached_rdd_count(spark)
         pins = PinScope()
-        out = curation.curate_corpus(spark, SF, budget=256, pins=pins)
+        out = curation.curate_corpus(spark, SF, budget=256, pins=pins, **kw)
         n = out.count()
         assert n > 0
-        assert pins.count >= 4  # quality, scrubbed, exact_dedup, near_dedup, sigs, banded
+        assert pins.count == n_pins
         # compare against the pins' own footprint, not a global before/after
         # delta: the 2-min periodic driver GC (session.py) can reclaim
         # OTHER tests' stale cached RDDs mid-run, so `> base` is racy
         assert _cached_rdd_count(spark) >= pins.count
         pins.release(blocking=True)
         assert _cached_rdd_count(spark) <= base
+
+    def test_curation_pins_release_to_baseline(self, spark):
+        # quality, scrubbed, exact_dedup, sigs, banded, near_dedup
+        self._assert_curation_pins_release(spark, 6)
+
+    def test_curation_pins_release_to_baseline_all_dedup_stages(self, spark):
+        # + the line_dedup output, the embedding projection, and the
+        # semantic_dedup and substring_dedup outputs
+        self._assert_curation_pins_release(
+            spark, 10, classifier_min=0.4, line_dedup=True,
+            semantic_threshold=0.95, substring_n=8,
+        )
 
     def test_scope_releases_on_error(self, spark):
         spark.catalog.clearCache()
