@@ -22,19 +22,20 @@ outright (Dolma's accepted trade: ~ε of genuinely-new rows lost, zero
 joins) — approximate, never emits a true duplicate.
 
 Scale notes:
-  * the filter is built with per-partition numpy bitmaps OR-merged by an
-    executor-side treeAggregate (the driver receives ONE m/8-byte bitmap);
-    size m for single-process memory: 1e9 keys at ε=1e-3 → m≈1.44e10
-    bits ≈ 1.8 GB.  Beyond a few billion standing keys the single bitmap
-    hits four ceilings at once — the per-task numpy bitmap during the
-    build fold, the treeAggregate blob, the probe broadcast, and the
-    JVM's 2 GB byte-array limit — so `bloom_dedup_against(...,
-    n_slices=S)` shards the filter: keys are sliced by an independent
-    hash, S per-slice bitmaps (m/S bits each, same ε) are built in ONE
-    standing pass (`build_bloom_sliced`), streamed to the driver one
-    slice at a time, and probed through per-slice FILES (sc.addFile +
-    np.memmap), so no single process ever materializes more than one
-    slice in RAM — residency is OS page cache, evictable.
+  * ONE filter shape for every size: the keys split over S slices by an
+    independent hash, and each slice is a classic Bloom filter over its
+    subset (m/S bits, same ε), written to its own bitmap FILE and probed
+    through sc.addFile + np.memmap.  S is derived from the standing key
+    count: the smallest S whose slice fits MAX_SLICE_BYTES (1 GiB — under
+    the ~2 GB ceiling that a JVM byte array, a task's numpy fold buffer
+    and a treeAggregate blob all share).  Every standing set below ~6e8
+    keys at ε=1e-3 gets S=1, the small regime: no slice hash, no Exchange,
+    the per-partition bitmaps OR-merged by a treeAggregate.  Beyond that
+    (1e9 keys at ε=1e-3 → m≈1.44e10 bits ≈ 1.8 GB) the build is still ONE
+    standing pass, repartitioned by slice, and the driver streams the
+    merged slices one at a time, so no single process ever materializes
+    more than one slice in RAM — probe residency is OS page cache,
+    evictable.
   * two xxhash64 hashes per key stay JVM-side; the k probe positions
     derive in numpy via Kirsch-Mitzenmacher double hashing, so Arrow
     moves 16 bytes/row regardless of k; Python touches only the bitmap —
@@ -50,7 +51,6 @@ from __future__ import annotations
 
 import math
 import os
-import tempfile
 import uuid
 from collections.abc import Iterator
 
@@ -101,106 +101,27 @@ def _positions(h1: np.ndarray, h2: np.ndarray, n_bits: int, n_hashes: int):
         yield (h1 + np.int64(i) * stride) % n_bits
 
 
-def build_bloom(
-    df: DataFrame,
-    key_col: str,
-    n_bits: int,
-    n_hashes: int,
-    seed: int = 42,
-) -> bytes:
-    """One map-side pass over `df`'s key column → packed little-endian
-    bitmap (n_bits/8 bytes).  Each partition folds its rows into a local
-    numpy bitmap (mapInArrow — genuinely per-partition imperative state);
-    the per-partition bitmaps (one binary row each) OR-merge with an
-    executor-side treeReduce, so the driver receives ONE bitmap — a
-    collect of all partition bitmaps would hold partitions×m/8 bytes on
-    the driver and become the binding ceiling long before the filter
-    itself does.  Deterministic: xxhash64 is seed-fixed and salt-varied;
-    OR is associative+commutative, so merge order is irrelevant."""
-    n_bytes = (n_bits + 7) // 8
-    spark = df.sparkSession
-    hashes = df.select(*_hash_cols(key_col, seed)).coalesce(
-        spark.sparkContext.defaultParallelism
-    )
-
-    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        bits = np.zeros(n_bytes, np.uint8)
-        seen = False
-        for batch in batches:
-            seen = True
-            h1 = batch.column(0).to_numpy(zero_copy_only=False)
-            h2 = batch.column(1).to_numpy(zero_copy_only=False)
-            for p in _positions(h1, h2, n_bits, n_hashes):
-                np.bitwise_or.at(
-                    bits, p >> 3, (1 << (p & 7)).astype(np.uint8)
-                )
-        if seen:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([bits.tobytes()], pa.binary())], ["bitmap"]
-            )
-
-    def _or(a: bytes, b) -> bytes:
-        if isinstance(b, (bytes, bytearray)):
-            other = b
-        else:  # seqOp side: a Row carrying one partition bitmap
-            other = b["bitmap"]
-        return (
-            np.frombuffer(a, np.uint8) | np.frombuffer(other, np.uint8)
-        ).tobytes()
-
-    # ONE action: treeAggregate's zero value covers the empty-RDD case, so
-    # there is no separate isEmpty() pass re-running partition 0's fold
-    return hashes.mapInArrow(fold, "bitmap binary").rdd.treeAggregate(
-        bytes(n_bytes), _or, _or, depth=2
-    )
-
-
-def with_bloom_probe(
-    df: DataFrame,
-    key_col: str,
-    bloom: bytes,
-    n_hashes: int,
-    seed: int = 42,
-    out_col: str = "maybe_member",
-) -> DataFrame:
-    """df + boolean `out_col`: True iff all k probe bits are set (member
-    OR false positive; False ⇒ definitely not a member).  The bitmap
-    ships to executors via a Spark broadcast; the probe is a scalar
-    pandas_udf over the two JVM-computed hash columns (positions derived
-    in numpy, `_positions`)."""
-    n_bits = len(bloom) * 8
-    bc = df.sparkSession.sparkContext.broadcast(bloom)
-
-    @F.pandas_udf("boolean")
-    def probe(h1s: pd.Series, h2s: pd.Series) -> pd.Series:
-        bits = np.frombuffer(bc.value, np.uint8)
-        h1 = h1s.to_numpy(dtype=np.int64)
-        h2 = h2s.to_numpy(dtype=np.int64)
-        ok = np.ones(len(h1), bool)
-        for p in _positions(h1, h2, n_bits, n_hashes):
-            ok &= ((bits[p >> 3] >> (p & 7)) & 1).astype(bool)
-        return pd.Series(ok)
-
-    return df.withColumn(out_col, probe(*_hash_cols(key_col, seed)))
-
-
-# ---------------------------------------------------------------------------
-# Sliced (beyond-RAM) mode
-# ---------------------------------------------------------------------------
+# Most bitmap bytes one slice may hold: under the ~2 GB ceiling of a JVM
+# byte array and of the per-task numpy fold buffer, with headroom.  A
+# standing set below ~6e8 keys at ε=1e-3 fits one slice.
+MAX_SLICE_BYTES = 1 << 30
 
 
 def _slice_col(key_col: str, n_slices: int, seed: int):
     """Slice assignment hash — INDEPENDENT of the probe hashes (seed+2):
     deriving the slice from h1 (e.g. pmod(h1, S)) would condition probe
     position 0 (= h1 mod m_s) on the slice residue and concentrate it on
-    1/S of each slice's bits, inflating the FP rate."""
+    1/S of each slice's bits, inflating the FP rate.  One slice needs no
+    hash: every key is in slice 0."""
+    if n_slices == 1:
+        return F.lit(0)
     return F.pmod(
         F.xxhash64(F.lit(seed + 2), F.col(key_col)), F.lit(n_slices)
     ).cast("int")
 
 
 class SlicedBloom:
-    """Handle to a sliced Bloom filter: one bitmap FILE per key slice,
+    """Handle to a built Bloom filter: one bitmap FILE per key slice,
     registered with sc.addFile so executors fetch them to local disk and
     probe via np.memmap — per-process RAM is page cache, not S bitmaps.
     `paths[s]` is slice s's local path on the driver; `file_names[s]` the
@@ -222,22 +143,21 @@ class SlicedBloom:
 
 
 def sliced_bloom_params(
-    n_keys: int, fp_rate: float, max_slice_bytes: int | None = None,
-    n_slices: int | None = None,
+    n_keys: int, fp_rate: float, n_slices: int | None = None
 ) -> tuple[int, int, int]:
     """(n_bits_per_slice, n_hashes, n_slices).  Total bits follow the
     classic sizing; keys split uniformly over slices (independent hash),
-    so m/S bits over n/S keys preserves ε per slice.  Pass `n_slices`
-    directly, or `max_slice_bytes` to derive the minimum S whose slice
-    bitmap fits the budget (the real driver: JVM byte arrays and numpy
-    fold buffers cap near 2 GB)."""
+    so m/S bits over n/S keys preserves ε per slice.  Without `n_slices`,
+    S is the smallest count whose slice bitmap fits MAX_SLICE_BYTES."""
     m_total, k = bloom_params(n_keys, fp_rate)
     if n_slices is None:
-        if max_slice_bytes is None:
-            raise ValueError("pass n_slices or max_slice_bytes")
-        n_slices = max(1, math.ceil(m_total / (8 * max_slice_bytes)))
+        n_slices = max(1, math.ceil(m_total / (8 * MAX_SLICE_BYTES)))
     m_slice = ((math.ceil(m_total / n_slices) + 7) // 8) * 8
     return m_slice, k, n_slices
+
+
+def _or(a: bytes, b: bytes) -> bytes:
+    return (np.frombuffer(a, np.uint8) | np.frombuffer(b, np.uint8)).tobytes()
 
 
 def build_bloom_sliced(
@@ -249,27 +169,38 @@ def build_bloom_sliced(
     seed: int = 42,
     out_dir: str | None = None,
 ) -> SlicedBloom:
-    """ONE pass over the standing keys → n_slices per-slice bitmap files.
+    """ONE map-side pass over the standing keys → n_slices bitmap files.
 
-    Shape: (slice, h1, h2) is 20 bytes/row JVM-side; a repartition BY
-    SLICE bounds each fold task's numpy allocation at ~one slice bitmap
-    (hash collisions can co-locate a couple of slices in one task —
-    expected occupancy 1, never all S, which is what an unpartitioned
-    fold would allocate).  Per-slice merge is a reduceByKey (executor-
-    side OR of the few same-slice partials); the driver then STREAMS the
-    merged slices via toLocalIterator — peak driver memory is ONE slice
-    bitmap, written straight to its file.  Slices with no keys get a
-    zero-filled file (probe ⇒ definitely-new, correct).  Files register
-    with sc.addFile, which serves them to executors on first use — the
-    same mechanism works on a real cluster (driver file server), not
-    just shared-disk local mode."""
+    Each fold task turns its (slice, h1, h2) rows (20 bytes/row JVM-side)
+    into one numpy bitmap per slice it sees (mapInArrow — genuinely
+    per-partition imperative state).  Only the partitioning and the merge
+    depend on S:
+      * S=1: no slice hash and no Exchange — the rows coalesce to the
+        default parallelism and the per-task bitmaps OR-merge in a
+        treeAggregate (executor-side levels once there are many
+        partitions, so the driver combines only a few; its zero value
+        covers an empty input);
+      * S>1: a repartition BY SLICE bounds each fold task's allocation at
+        ~one slice bitmap (hash collisions can co-locate a couple of
+        slices — never all S), a reduceByKey over the integer slice ids
+        puts exactly one slice in each of its S partitions, and the
+        driver STREAMS them via toLocalIterator — peak driver memory is
+        ONE slice bitmap, written straight to its file.  Slices with no
+        keys get a zero-filled file (probe ⇒ definitely-new, correct).
+    Deterministic: xxhash64 is seed-fixed and salt-varied; OR is
+    associative+commutative, so merge order is irrelevant.
+
+    Files register with sc.addFile, which serves them to executors on
+    first use — the same mechanism works on a real cluster (driver file
+    server), not just shared-disk local mode.  Without `out_dir` they are
+    written under the SparkContext's own SparkFiles root, which Spark
+    deletes when the context stops."""
     n_bytes = (n_bits_per_slice + 7) // 8
-    spark = df.sparkSession
-    sc = spark.sparkContext
+    sc = df.sparkSession.sparkContext
     hashes = df.select(
         _slice_col(key_col, n_slices, seed).alias("slice"),
         *_hash_cols(key_col, seed),
-    ).repartition(n_slices, "slice")
+    )
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         bits: dict[int, np.ndarray] = {}
@@ -295,25 +226,39 @@ def build_bloom_sliced(
                 ["slice", "bitmap"],
             )
 
-    merged = (
-        hashes.mapInArrow(fold, "slice int, bitmap binary")
-        .rdd.map(lambda r: (r["slice"], r["bitmap"]))
-        .reduceByKey(
-            lambda a, b: (
-                np.frombuffer(a, np.uint8) | np.frombuffer(b, np.uint8)
-            ).tobytes(),
-            numPartitions=n_slices,
+    def partials(frame: DataFrame):
+        return frame.mapInArrow(fold, "slice int, bitmap binary").rdd.map(
+            lambda r: (r["slice"], r["bitmap"])
         )
-    )
-    out_dir = out_dir or tempfile.mkdtemp(prefix="bloom_slices_")
-    os.makedirs(out_dir, exist_ok=True)
+
+    if n_slices == 1:
+        bitmap = (
+            partials(hashes.coalesce(sc.defaultParallelism))
+            .values()
+            .treeAggregate(bytes(n_bytes), _or, _or, depth=2)
+        )
+        merged = [(0, bitmap)]
+    else:
+        merged = (
+            partials(hashes.repartition(n_slices, "slice"))
+            .reduceByKey(_or, numPartitions=n_slices)
+            .toLocalIterator()
+        )
+    # file names are unique per build: SparkFiles is one flat namespace
     token = uuid.uuid4().hex[:8]
+    if out_dir is None:
+        from pyspark import SparkFiles
+
+        out_dir = os.path.join(
+            SparkFiles.getRootDirectory(), f"bloom_slices_{token}"
+        )
+    os.makedirs(out_dir, exist_ok=True)
     paths = [
         os.path.join(out_dir, f"bloomslice_{token}_{s}.bin")
         for s in range(n_slices)
     ]
     written = set()
-    for s, bmp in merged.toLocalIterator():  # ONE slice in driver RAM
+    for s, bmp in merged:  # ONE slice in driver RAM
         with open(paths[s], "wb") as fp:
             fp.write(bmp)
         written.add(s)
@@ -333,12 +278,14 @@ def with_sliced_bloom_probe(
     store: SlicedBloom,
     out_col: str = "maybe_member",
 ) -> DataFrame:
-    """Sliced counterpart of with_bloom_probe — still ONE pass over `df`:
-    each Arrow batch groups its rows by slice and probes that slice's
-    np.memmap'd bitmap file (SparkFiles fetch, falling back to the build
-    path when driver and worker share a filesystem).  A worker that sees
-    every slice over its lifetime holds file PAGES, not S resident
-    bitmaps — the OS evicts under pressure."""
+    """df + boolean `out_col`: True iff all k probe bits are set (member
+    OR false positive; False ⇒ definitely not a member).  ONE map-side
+    pass over `df`: a scalar pandas_udf over the JVM-computed slice and
+    hash columns groups each Arrow batch's rows by slice and probes that
+    slice's np.memmap'd bitmap file (SparkFiles fetch, falling back to
+    the build path when driver and worker share a filesystem).  A worker
+    that sees every slice over its lifetime holds file PAGES, not S
+    resident bitmaps — the OS evicts under pressure."""
     n_bits = store.n_bits_per_slice
     n_hashes = store.n_hashes
     names = store.file_names
@@ -375,17 +322,15 @@ def with_sliced_bloom_probe(
 
 def bloom_dedup_against(
     new: DataFrame,
-    standing: DataFrame,
+    standing: DataFrame | None,
     key_col: str,
     fp_rate: float = 1e-3,
     n_standing: int | None = None,
     confirm: bool = True,
     seed: int = 42,
-    prebuilt: tuple[bytes, int] | None = None,
+    prebuilt: SlicedBloom | None = None,
     pins=None,
     n_slices: int | None = None,
-    max_slice_bytes: int | None = None,
-    prebuilt_sliced: SlicedBloom | None = None,
 ) -> DataFrame:
     """Rows of `new` whose `key_col` does not occur in `standing`.
 
@@ -404,57 +349,36 @@ def bloom_dedup_against(
     with only the Bloom-positive sliver entering the join.  confirm=False:
     approximate (Dolma mode) — Bloom-positive rows are dropped without
     confirmation, losing ~fp_rate of genuinely-new rows; no true duplicate
-    survives either way.
+    survives either way.  `standing` may be None only with confirm=False
+    and a `prebuilt` filter — then it is never read.
 
     `n_standing` sizes the filter; pass the known corpus row count to skip
     the counting pass (an approximate count is fine — ε degrades
-    gracefully if undersized).
+    gracefully if undersized).  `n_slices` fixes the slice count S; by
+    default S is derived from MAX_SLICE_BYTES (1 for all but the largest
+    standing sets; see module docstring).
 
-    `prebuilt` = (bitmap, n_hashes) from an earlier `build_bloom` over the
-    SAME standing keys and seed — the daily-shard amortization: build the
-    filter once at backfill (and OR-merge each shard's own bitmap into it
-    after ingest — Bloom filters union by bitwise OR), then every shard
-    pays only the map-side probe + the sliver confirm, never the standing
-    build scan.
-
-    `n_slices` / `max_slice_bytes` / `prebuilt_sliced` select the SLICED
-    regime for key sets whose single bitmap would exceed process memory
-    (see module docstring): per-slice bitmap FILES instead of one
-    broadcast, same exactness guarantees (slice hash is independent of
-    the probe hashes, so the per-slice FP bound is the classic one).
-    Semantics are identical to the single-bitmap path — parity is pinned
-    by tests/test_bloom_retrieval.py."""
-    sliced = (
-        n_slices is not None
-        or max_slice_bytes is not None
-        or prebuilt_sliced is not None
-    )
-    if sliced:
-        if prebuilt is not None:
-            raise ValueError("prebuilt is the single-bitmap regime; pass "
-                             "prebuilt_sliced for the sliced one")
-        if prebuilt_sliced is not None:
-            store = prebuilt_sliced
-        else:
-            n = n_standing if n_standing is not None else standing.count()
-            m_slice, k, s = sliced_bloom_params(
-                n, fp_rate, max_slice_bytes=max_slice_bytes,
-                n_slices=n_slices,
+    `prebuilt` = a SlicedBloom from `build_bloom_sliced` over the SAME
+    standing keys — the daily-shard amortization: build the filter once
+    at backfill, then every shard pays only the map-side probe + the
+    sliver confirm, never the standing build scan.  A prebuilt filter
+    carries its own S and seed; an `n_slices` that disagrees raises."""
+    if standing is None and (confirm or prebuilt is None):
+        raise ValueError(
+            "standing is required unless confirm=False with a prebuilt filter"
+        )
+    if prebuilt is not None:
+        if n_slices is not None and n_slices != prebuilt.n_slices:
+            raise ValueError(
+                f"n_slices={n_slices} conflicts with the prebuilt filter's "
+                f"{prebuilt.n_slices} slices"
             )
-            store = build_bloom_sliced(standing, key_col, m_slice, k, s, seed)
-        flagged = with_sliced_bloom_probe(
-            new, key_col, store, out_col="__maybe"
-        )
+        store = prebuilt
     else:
-        if prebuilt is not None:
-            bloom, n_hashes = prebuilt
-        else:
-            n = n_standing if n_standing is not None else standing.count()
-            n_bits, n_hashes = bloom_params(n, fp_rate)
-            bloom = build_bloom(standing, key_col, n_bits, n_hashes, seed)
-        flagged = with_bloom_probe(
-            new, key_col, bloom, n_hashes, seed, out_col="__maybe"
-        )
+        n = n_standing if n_standing is not None else standing.count()
+        m_slice, k, s = sliced_bloom_params(n, fp_rate, n_slices)
+        store = build_bloom_sliced(standing, key_col, m_slice, k, s, seed)
+    flagged = with_sliced_bloom_probe(new, key_col, store, out_col="__maybe")
     if pins is not None:
         flagged = pins.pin(flagged)
     definite = flagged.filter(~F.col("__maybe")).drop("__maybe")

@@ -30,8 +30,13 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    from .bloom import SlicedBloom
 
 WORD_RE = "[^a-z0-9]+"
 
@@ -172,9 +177,9 @@ def _exploded_ngrams(df: DataFrame, n: int, text_col: str, *keep_cols: str) -> D
 
 # Benchmark gram sets are small by nature (eval suites, not corpora), but
 # an adversarially large "benchmark" must not OOM executors through an
-# unconditional broadcast — same gate idiom as DUPGRAM_BROADCAST_MAX_ROWS /
-# LM_BROADCAST_MAX_ROWS: one bounded count action on the distinct gram set,
-# shuffle join above the limit with identical output (VERDICT r5 #3).
+# unconditional broadcast — same gate idiom as LM_BROADCAST_MAX_ROWS: one
+# bounded count action on the distinct gram set, shuffle join above the
+# limit with identical output (VERDICT r5 #3).
 BENCHGRAM_BROADCAST_MAX_ROWS = 2_000_000
 
 
@@ -811,21 +816,12 @@ def _positioned_ngrams(df: DataFrame, n: int, text_col: str, id_col: str) -> Dat
     ).select(id_col, F.col("_g.pos").alias("pos"), F.col("_g.gh").alias("gh"))
 
 
-# dup-gram sets small enough to broadcast to every executor: 2M ghs ≈
-# 90 MB of md5 strings — the same bounded-broadcast discipline as
-# LM_BROADCAST_MAX_ROWS (an adversarial fully-duplicated corpus degrades
-# to a shuffle join, never an executor OOM)
-DUPGRAM_BROADCAST_MAX_ROWS = 2_000_000
-
-
 def duplicate_spans(
     df: DataFrame,
     n: int = 8,
     min_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    count_method: str = "auto",
-    pins=None,
 ) -> DataFrame:
     """Maximal duplicated word spans per document: every word n-gram whose
     exact text occurs >= min_count times ANYWHERE in the corpus marks its
@@ -846,50 +842,17 @@ def duplicate_spans(
     Interval merge is the standard running-max island trick: a span opens
     where its start exceeds max(end)+1 over all earlier spans in the doc.
 
-    `count_method` picks how the corpus-wide frequency reaches each gram:
-      * 'window' / 'auto' — COUNT(*) OVER (PARTITION BY gh): ONE shuffle
-        of the (id, pos, gh) stream, sorted by gh.  The oracle-mirrored
-        plan, and the MEASURED winner (see below).
-      * 'join' — groupBy(gh).count().filter(≥ min_count), then join the
-        gram stream against the DUPLICATED-gram set only; the dup set
-        broadcasts when ≤ DUPGRAM_BROADCAST_MAX_ROWS (one bounded count
-        action on the pinned set), so no gram row shuffles for the match.
-        Sounds strictly better — it is NOT: the gram stream has to be
-        GENERATED twice (once for the counts, once for the join probe),
-        and gram generation (tokenize + slice + md5 × corpus) dominates
-        the stage.  Measured at 1M docs / ~200M grams, local[32]:
-        window 45.9-55.7 s vs join 85.3-90.0 s — the extra explode costs
-        ~2× more than the positions-through-the-sort it saves.  Pinning
-        the gram stream instead would persist ~12 GB to trade the same
-        CPU for storage I/O.  'join' stays available for corpora whose
-        economics invert (very long docs → few grams per byte, or a
-        shuffle-starved cluster); values are identical either way."""
+    Why a window count and not groupBy(gh).count() joined back to the
+    gram stream: the join has to GENERATE the gram stream twice (once for
+    the counts, once for the probe), and gram generation (tokenize +
+    slice + md5 × corpus) dominates the stage.  Measured at 1M docs /
+    ~200M grams, local[32]: window 45.9-55.7 s vs join 85.3-90.0 s."""
     from pyspark.sql import Window
 
-    from ..pinning import pin as _pin
-
     grams = _positioned_ngrams(df, n, text_col, id_col)
-    if count_method in ("window", "auto"):
-        cnt = grams.withColumn(
-            "c", F.count(F.lit(1)).over(Window.partitionBy("gh"))
-        )
-        dup_marks = cnt.filter(F.col("c") >= min_count)
-    elif count_method == "join":
-        dup_ghs = _pin(
-            grams.groupBy("gh")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .filter(F.col("c") >= min_count)
-            .select("gh"),
-            pins,
-        )
-        rhs = (
-            F.broadcast(dup_ghs)
-            if dup_ghs.count() <= DUPGRAM_BROADCAST_MAX_ROWS
-            else dup_ghs
-        )
-        dup_marks = grams.join(rhs, "gh")
-    else:
-        raise ValueError(f"unknown count_method {count_method!r}")
+    dup_marks = grams.withColumn(
+        "c", F.count(F.lit(1)).over(Window.partitionBy("gh"))
+    ).filter(F.col("c") >= min_count)
     dup = dup_marks.select(
         id_col, F.col("pos").alias("s"), (F.col("pos") + (n - 1)).alias("e")
     )
@@ -923,14 +886,12 @@ def dup_span_stats(
     min_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    count_method: str = "auto",
-    pins=None,
 ) -> DataFrame:
     """Per-document duplicated-span rollup over duplicate_spans:
     (id, n_spans, dup_words, n_words, dup_frac) for documents with >= 1
     duplicated span.  dup_frac is the usual removal-decision diagnostic
     (Lee et al. drop or trim by duplicated fraction)."""
-    spans = duplicate_spans(df, n, min_count, id_col, text_col, count_method, pins)
+    spans = duplicate_spans(df, n, min_count, id_col, text_col)
     lens = df.select(id_col, F.size(_words(text_col)).alias("n_words"))
     agg = spans.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_spans"),
@@ -953,8 +914,6 @@ def remove_duplicate_spans(
     min_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    count_method: str = "auto",
-    pins=None,
 ) -> DataFrame:
     """df with `text_col` rewritten to the word sequence OUTSIDE every
     duplicated span (Lee et al.'s ExactSubstr-cut), plus n_words_kept.
@@ -965,7 +924,7 @@ def remove_duplicate_spans(
     The rebuild collects each doc's surviving (idx, word) pairs into one
     array — bounded by the document length, the same per-doc memory
     contract every text operator here already has."""
-    spans = duplicate_spans(df, n, min_count, id_col, text_col, count_method, pins)
+    spans = duplicate_spans(df, n, min_count, id_col, text_col)
     cov = spans.select(
         id_col,
         F.explode(
@@ -1056,16 +1015,22 @@ def dedup_lines(
     array_contains membership scan per line, which is O(lines·kept) and
     turns a 10^5-line mega-doc into a quadratic single task."""
     keys = _line_keys(df, id_col, text_col, sep)
+    return _rebuild_lines(df, _first_keeps(keys, id_col), id_col, text_col, sep)
+
+
+def _first_keeps(keys: DataFrame, id_col: str) -> DataFrame:
+    """(id, _keep_idx): per document, the line indices that are the FIRST
+    (id, idx) occurrence of their key among `keys` — the keep decision
+    dedup_lines and dedup_lines_against share."""
     firsts = keys.groupBy("_key").agg(
         F.min(F.struct(F.col(id_col), F.col("idx"))).alias("_first")
     )
-    keep_sets = (
+    return (
         keys.join(firsts, "_key")
         .filter(F.struct(F.col(id_col), F.col("idx")) == F.col("_first"))
         .groupBy(id_col)
         .agg(F.collect_list("idx").alias("_keep_idx"))
     )
-    return _rebuild_lines(df, keep_sets, id_col, text_col, sep)
 
 
 def _line_keys(df: DataFrame, id_col: str, text_col: str, sep: str) -> DataFrame:
@@ -1132,8 +1097,7 @@ def dedup_lines_against(
     fp_rate: float = 1e-4,
     confirm: bool = True,
     n_standing_lines: int | None = None,
-    prebuilt: tuple[bytes, int] | None = None,
-    prebuilt_sliced=None,
+    prebuilt: SlicedBloom | None = None,
     seed: int = 42,
 ) -> DataFrame:
     """Incremental line-level dedup: drop from each `shard` document every
@@ -1146,40 +1110,25 @@ def dedup_lines_against(
     only the shard's rows change.
 
     100 TB shape — the standing corpus is never shuffled:
-      * the standing pass is PURE MAP: explode lines → md5(normalized) →
-        per-partition Bloom bitmaps, OR-merged executor-side
-        (operators/bloom.build_bloom; no distinct, no groupBy — inserting
-        a duplicate key twice is a no-op);
-      * shard lines probe the bitmap map-side; NEGATIVES (definitely not
-        in standing) skip every join — with a calibrated ε that is almost
-        all genuinely-new lines;
-      * confirm=True (exact): only the positive sliver anti-joins the
-        standing line keys — the Bloom is a pure join-input reducer, so
-        the output is exact.  confirm=False (approximate, Dolma's trade):
-        positives drop outright — ~ε of genuinely-new lines lost, ZERO
-        standing-side shuffle ever.
-      * within-shard first-occurrence keep reuses dedup_lines' shape
-        (groupBy(key).min(struct) over NEW lines only — shard-sized).
-      * `prebuilt` = (bitmap, n_hashes) from build_bloom over the standing
-        line keys (same seed), the amortized loop: build at backfill,
-        OR-in each accepted shard's own line bitmap after ingest.
-        `prebuilt_sliced` = a SlicedBloom for standing line sets beyond
-        one bitmap's practical ceiling (10^11 lines at ε=1e-4 ≈ 240 GB
-        of bitmap → slice it; see bloom.py module docstring).
+      * both sides reduce to line keys (explode lines → md5(normalized));
+        the shard's keys go through operators/bloom.bloom_dedup_against
+        against the standing keys — one map-side Bloom build (no
+        distinct, no groupBy: inserting a duplicate key twice is a
+        no-op), a map-side probe whose NEGATIVES skip every join, and,
+        with confirm=True (exact), an anti-join of only the positive
+        sliver.  confirm=False (approximate, Dolma's trade): positives
+        drop outright — ~ε of genuinely-new lines lost, ZERO
+        standing-side shuffle ever;
+      * within-shard first-occurrence keep is dedup_lines' keep decision
+        (groupBy(key).min(struct) over NEW lines only — shard-sized);
+      * `prebuilt` = a SlicedBloom from bloom.build_bloom_sliced over the
+        standing line keys, the amortized loop: build at backfill, then
+        each shard pays only the probe (+ the sliver confirm).  With
+        confirm=False and `prebuilt`, `standing` may be None.
 
     Structural (blank/punct-only) lines are exempt and survive, exactly as
     in dedup_lines; fully-duplicated documents keep an empty string."""
-    from .bloom import (
-        bloom_params,
-        build_bloom,
-        with_bloom_probe,
-        with_sliced_bloom_probe,
-    )
-
-    if standing is None and (confirm or (prebuilt is None and prebuilt_sliced is None)):
-        raise ValueError(
-            "standing is required unless confirm=False with a prebuilt filter"
-        )
+    from .bloom import bloom_dedup_against
 
     skeys = _line_keys(shard, id_col, text_col, sep)
     # the standing side needs NO id column (only line keys leave it) — a
@@ -1197,52 +1146,13 @@ def dedup_lines_against(
     # ≥2 consumers exist; eviction follows the session-cache discipline
     # (callers clear after materializing — the curation flows checkpoint
     # right above this boundary).
-    st_consumers = (
-        (1 if confirm else 0)
-        + (
-            0
-            if (prebuilt is not None or prebuilt_sliced is not None)
-            else (1 if n_standing_lines is not None else 2)
-        )
+    st_consumers = (1 if confirm else 0) + (
+        0 if prebuilt is not None else (1 if n_standing_lines is not None else 2)
     )
     if st_keys is not None and st_consumers >= 2:
         st_keys = st_keys.persist()
-
-    if prebuilt_sliced is not None:
-        flagged = with_sliced_bloom_probe(
-            skeys, "_key", prebuilt_sliced, out_col="_maybe"
-        )
-    else:
-        if prebuilt is not None:
-            bmp, k = prebuilt
-        else:
-            n = (
-                n_standing_lines
-                if n_standing_lines is not None
-                else st_keys.count()
-            )
-            n_bits, k = bloom_params(n, fp_rate)
-            bmp = build_bloom(st_keys, "_key", n_bits, k, seed)
-        flagged = with_bloom_probe(skeys, "_key", bmp, k, seed, out_col="_maybe")
-
-    definite_new = flagged.filter(~F.col("_maybe")).drop("_maybe")
-    if confirm:
-        sliver_new = (
-            flagged.filter(F.col("_maybe"))
-            .drop("_maybe")
-            .join(st_keys, "_key", "left_anti")
-        )
-        new_keys = definite_new.unionByName(sliver_new)
-    else:
-        new_keys = definite_new
-
-    firsts = new_keys.groupBy("_key").agg(
-        F.min(F.struct(F.col(id_col), F.col("idx"))).alias("_first")
+    new_keys = bloom_dedup_against(
+        skeys, st_keys, "_key", fp_rate=fp_rate, n_standing=n_standing_lines,
+        confirm=confirm, seed=seed, prebuilt=prebuilt,
     )
-    keep_sets = (
-        new_keys.join(firsts, "_key")
-        .filter(F.struct(F.col(id_col), F.col("idx")) == F.col("_first"))
-        .groupBy(id_col)
-        .agg(F.collect_list("idx").alias("_keep_idx"))
-    )
-    return _rebuild_lines(shard, keep_sets, id_col, text_col, sep)
+    return _rebuild_lines(shard, _first_keeps(new_keys, id_col), id_col, text_col, sep)

@@ -3191,14 +3191,14 @@ WHERE NOT EXISTS (SELECT 1 FROM documents d WHERE d.text = s.text)
 
 
 def q_bloom_dedup_sliced(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same contract as q_bloom_dedup but through the SLICED filter
-    regime (bloom.bloom_dedup_against(n_slices=4) — per-slice bitmap
-    files instead of one broadcast blob, the beyond-RAM layout for
-    billions of standing keys).  Exactness is regime-independent: the
-    confirm join repairs every false positive, so the output is still
-    EXACTLY the anti-join — the oracle is the same statement with a
-    shifted shard (ids +3M/+4M, suffix ' ww') so the two rows cannot
-    mask each other."""
+    """Same contract as q_bloom_dedup but with the filter forced into
+    four slices (bloom.bloom_dedup_against(n_slices=4) — the slice-by
+    repartition, per-slice merge and per-slice probe files that billions
+    of standing keys get; sf0.01 alone would derive one slice).
+    Exactness is independent of the slice count: the confirm join
+    repairs every false positive, so the output is still EXACTLY the
+    anti-join — the oracle is the same statement with a shifted shard
+    (ids +3M/+4M, suffix ' ww') so the two rows cannot mask each other."""
     from ..operators import bloom
 
     docs = _read(spark, sf_dir, "documents")

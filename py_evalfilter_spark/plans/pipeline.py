@@ -32,14 +32,11 @@ def feature_pipeline(
     spark: SparkSession,
     sf_dir: str,
     gap_s: int = 1800,
-    min_map_partitions: int | None = None,
 ) -> DataFrame:
     """Full pipeline over the events-derived transcripts at ``sf_dir``."""
     t = dq.transcripts_from_events(
         dq._read(spark, sf_dir, "events"), keep_order_col=True
     )
-    if min_map_partitions:
-        t = t.repartition(min_map_partitions)
     profile = dq.profile_df(spark, sf_dir)
     return feature_pipeline_from_df(t, profile, gap_s=gap_s)
 
@@ -84,28 +81,12 @@ def feature_pipeline_staged(
     )
     info["derive"] = {"manifest": m, "skipped": skipped}
 
-    def build_windowed() -> DataFrame:
-        order = ("ts", "event_id") if "event_id" in t.columns else ("turn_idx", "ts")
-        w = win_op.with_session(
-            win_op.with_rolling_count(
-                win_op.with_backfill(t, order=order), order=order
-            ),
-            gap_s=gap_s,
-            order=order,
-        )
-        if "event_id" in t.columns:
-            w = w.drop("event_id")
-        return asof_op.asof_join(
-            w, dq.profile_df(spark, sf_dir), on="ts", by="conv_id",
-            right_ts_alias="profile_ts",
-        )
-
     windowed_path = f"{work_dir}/stage_windowed"
     w, m, skipped = tables.run_stage(
         spark,
         windowed_path,
         "windowed",
-        build_windowed,
+        lambda: _windowed(t, dq.profile_df(spark, sf_dir), gap_s),
         config={"sf_dir": sf_dir, "gap_s": gap_s},
         input_paths=[derive_path],
     )
@@ -147,6 +128,15 @@ def feature_pipeline_from_df(
     the corpus; plan-tested).  The key must stay UNALIASED: renaming breaks
     ordering propagation.
     """
+    return textfeats.with_rant_stats(_windowed(transcripts, profile, gap_s))
+
+
+def _windowed(
+    transcripts: DataFrame, profile: DataFrame | None, gap_s: int
+) -> DataFrame:
+    """The window chain (backfill → rolling count → session) plus the
+    optional as-of profile merge — the windowed stage of both the single
+    plan and the staged pipeline."""
     order = ("ts", "event_id") if "event_id" in transcripts.columns else ("turn_idx", "ts")
     windowed = win_op.with_session(
         win_op.with_rolling_count(
@@ -161,4 +151,4 @@ def feature_pipeline_from_df(
         windowed = asof_op.asof_join(
             windowed, profile, on="ts", by="conv_id", right_ts_alias="profile_ts"
         )
-    return textfeats.with_rant_stats(windowed)
+    return windowed

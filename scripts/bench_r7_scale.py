@@ -1,9 +1,9 @@
 """Round-7 robustness rows at local[32] (serialized; one JSON line):
 
-A) SLICED Bloom at ~10M standing keys: single-bitmap build+probe vs the
-   sliced (per-slice bitmap FILE) regime at S slices — exactness parity
-   (kept counts identical) and the slicing overhead, which buys the
-   beyond-RAM ceiling (no process ever holds more than one slice).
+A) SLICED Bloom at ~10M standing keys: build + probe/confirm of the
+   filter forced to S slices (per-slice bitmap FILEs, --n-slices) — the
+   cost of the beyond-RAM layout, where no process ever holds more than
+   one slice.  S=1 is the filter every smaller standing set derives.
 
 B) Incremental line dedup at ~1M standing pages x 10k-page shard:
    dedup_lines_against cold (filter built in-call) and amortized
@@ -93,16 +93,6 @@ def main() -> None:
         shard = spark.read.parquet(f"{work}/shard_keys.parquet")
 
         t0 = time.perf_counter()
-        n_bits, k_h = bloom.bloom_params(n_keys, 1e-3)
-        filt = bloom.build_bloom(standing, "k", n_bits, k_h)
-        single_build = round(time.perf_counter() - t0, 2)
-        t0 = time.perf_counter()
-        kept_single = bloom.bloom_dedup_against(
-            shard, standing, "k", prebuilt=(filt, k_h)
-        ).count()
-        single_probe = round(time.perf_counter() - t0, 2)
-
-        t0 = time.perf_counter()
         m_s, k_s, n_sl = bloom.sliced_bloom_params(
             n_keys, 1e-3, n_slices=args.n_slices
         )
@@ -112,22 +102,18 @@ def main() -> None:
         sliced_build = round(time.perf_counter() - t0, 2)
         t0 = time.perf_counter()
         kept_sliced = bloom.bloom_dedup_against(
-            shard, standing, "k", prebuilt_sliced=store
+            shard, standing, "k", prebuilt=store
         ).count()
         sliced_probe = round(time.perf_counter() - t0, 2)
         out["sliced_bloom"] = {
             "n_standing_keys": n_keys,
             "n_shard": 20_000,
-            "single_build_sec": single_build,
-            "single_probe_confirm_sec": single_probe,
             "sliced_build_sec": sliced_build,
             "sliced_probe_confirm_sec": sliced_probe,
             "n_slices": n_sl,
             "slice_mib": round(m_s / 8 / 2**20, 1),
             "total_mib": round(m_s * n_sl / 8 / 2**20, 1),
-            "kept_single": kept_single,
             "kept_sliced": kept_sliced,
-            "exact_match": kept_single == kept_sliced,
         }
         print(json.dumps({"partial": "A", **out["sliced_bloom"]}), flush=True)
 
@@ -201,15 +187,15 @@ def main() -> None:
         inc_cold = round(time.perf_counter() - t0, 2)
 
         st_keys = corpus._line_keys(standing_pages, "doc_id", "text", "\n").select("_key")
-        nb, kh = bloom.bloom_params(n_standing_lines, 1e-4)
+        m_l, k_l, s_l = bloom.sliced_bloom_params(n_standing_lines, 1e-4)
         t0 = time.perf_counter()
-        line_filt = bloom.build_bloom(st_keys, "_key", nb, kh)
+        line_filt = bloom.build_bloom_sliced(st_keys, "_key", m_l, k_l, s_l)
         line_build = round(time.perf_counter() - t0, 2)
         inc_warm = []
         for _ in range(3):
             t0 = time.perf_counter()
             corpus.dedup_lines_against(
-                shard_pages, standing_pages, prebuilt=(line_filt, kh)
+                shard_pages, standing_pages, prebuilt=line_filt
             ).agg(F.count(F.lit(1)), F.sum("n_lines_kept"),
                   F.sum("n_lines_dropped")).collect()
             inc_warm.append(round(time.perf_counter() - t0, 2))
@@ -222,7 +208,7 @@ def main() -> None:
         for _ in range(3):
             t0 = time.perf_counter()
             approx_row = corpus.dedup_lines_against(
-                shard_pages, None, confirm=False, prebuilt=(line_filt, kh)
+                shard_pages, None, confirm=False, prebuilt=line_filt
             ).agg(F.count(F.lit(1)).alias("n"),
                   F.sum("n_lines_kept").alias("k")).collect()[0]
             inc_approx.append(round(time.perf_counter() - t0, 2))
@@ -236,7 +222,7 @@ def main() -> None:
         ).collect()[0]
         batch_sec = round(time.perf_counter() - t0, 2)
         inc_row = corpus.dedup_lines_against(
-            shard_pages, standing_pages, prebuilt=(line_filt, kh)
+            shard_pages, standing_pages, prebuilt=line_filt
         ).agg(F.count(F.lit(1)).alias("n"), F.sum("n_lines_kept").alias("k")).collect()[0]
         out["line_dedup_incremental"] = {
             "n_standing_pages": n_pages,
@@ -251,7 +237,7 @@ def main() -> None:
             "rows_equal": int(batch_row["n"]) == int(inc_row["n"]),
             "lines_kept_equal": int(batch_row["k"]) == int(inc_row["k"]),
             "exact_lines_kept": int(batch_row["k"]),
-            "filter_mib": round(nb / 8 / 2**20, 1),
+            "filter_mib": round(m_l * s_l / 8 / 2**20, 1),
         }
         print(json.dumps({"partial": "B", **out["line_dedup_incremental"]}),
               flush=True)

@@ -29,68 +29,49 @@ class TestBloomParams:
         assert b < a < 1.0
 
 
+def _built(df, key_col, n_keys, fp_rate, n_slices, **kw):
+    m_s, k, s = bloom.sliced_bloom_params(n_keys, fp_rate, n_slices)
+    return bloom.build_bloom_sliced(df, key_col, m_s, k, s, **kw)
+
+
+def _group_stages(spark, group):
+    """(jobs, stages that wrote shuffle bytes) of every job run under
+    `group`, read from the status store."""
+    from py4j.protocol import Py4JJavaError
+
+    def seq(scala_seq):
+        return [scala_seq.apply(i) for i in range(scala_seq.size())]
+
+    store = spark.sparkContext._jsc.sc().statusStore()
+    jobs = [
+        j for j in seq(store.jobsList(None))
+        if j.jobGroup().isDefined() and j.jobGroup().get() == group
+    ]
+    shuffles = 0
+    for sid in {sid for j in jobs for sid in seq(j.stageIds())}:
+        try:
+            st = store.lastStageAttempt(sid)
+        except Py4JJavaError:  # skipped stage: never attempted
+            continue
+        shuffles += st.shuffleWriteBytes() > 0
+    return len(jobs), shuffles
+
+
 class TestBloomFilter:
+    """One set of contracts for the filter.  This class runs them at one
+    slice (the size every standing set below ~6e8 keys at ε=1e-3 derives);
+    TestSlicedBloom runs the same tests at three slices."""
+
+    N_SLICES = 1
+
     @pytest.fixture(scope="class")
     def corpus(self, spark):
         return spark.createDataFrame(
             pd.DataFrame({"k": [f"key_{i:05d}" for i in range(500)]})
         )
 
-    def test_no_false_negatives(self, spark, corpus):
-        """Every inserted key must probe positive — the property the exact
-        path depends on (negatives skip the confirm join entirely)."""
-        n_bits, k = bloom.bloom_params(500, 1e-3)
-        filt = bloom.build_bloom(corpus, "k", n_bits, k)
-        probed = bloom.with_bloom_probe(corpus, "k", filt, k).toPandas()
-        assert probed.maybe_member.all()
-
-    def test_fp_rate_calibrated(self, spark, corpus):
-        """Probing 5000 DISJOINT keys: measured FP rate within 4x of the
-        theoretical rate (small-sample slack), and far below 1."""
-        n_bits, k = bloom.bloom_params(500, 1e-2)
-        filt = bloom.build_bloom(corpus, "k", n_bits, k)
-        others = spark.createDataFrame(
-            pd.DataFrame({"k": [f"other_{i:05d}" for i in range(5000)]})
-        )
-        got = bloom.with_bloom_probe(others, "k", filt, k).toPandas()
-        measured = got.maybe_member.mean()
-        theory = bloom.theoretical_fp_rate(n_bits, k, 500)
-        assert measured <= max(4 * theory, 0.05), (measured, theory)
-
-    def test_dedup_exact_equals_anti_join(self, spark):
-        """confirm=True output ≡ left_anti join, including under forced
-        false positives (an undersized filter makes FPs certain — the
-        confirm join must repair every one of them)."""
-        old = spark.createDataFrame(
-            pd.DataFrame({"k": [f"doc {i} text" for i in range(200)],
-                          "extra": range(200)})
-        ).select("k")
-        new = spark.createDataFrame(
-            pd.DataFrame({
-                "id": range(300),
-                "k": [f"doc {i} text" if i % 3 == 0 else f"fresh {i} text"
-                      for i in range(300)],
-            })
-        )
-        want = {
-            r["id"]
-            for r in new.join(old, "k", "left_anti").select("id").collect()
-        }
-        for fp in (1e-3, 0.5):  # 0.5 -> tiny filter, rampant FPs
-            got = bloom.bloom_dedup_against(
-                new, old, "k", fp_rate=fp, confirm=True
-            )
-            assert {r["id"] for r in got.select("id").collect()} == want, fp
-        # prebuilt-filter path (the amortized daily loop) is identical
-        n_bits, k = bloom.bloom_params(200, 1e-3)
-        filt = bloom.build_bloom(old, "k", n_bits, k)
-        got_pre = bloom.bloom_dedup_against(
-            new, old, "k", prebuilt=(filt, k)
-        )
-        assert {r["id"] for r in got_pre.select("id").collect()} == want
-        assert want and len(want) < 300  # non-vacuous both ways
-
-    def test_dedup_unconfirmed_never_keeps_a_duplicate(self, spark):
+    @pytest.fixture(scope="class")
+    def old_new(self, spark):
         old = spark.createDataFrame(
             pd.DataFrame({"k": [f"doc {i} text" for i in range(200)]})
         )
@@ -101,13 +82,77 @@ class TestBloomFilter:
                       for i in range(300)],
             })
         )
+        return old, new
+
+    def test_no_false_negatives(self, spark, corpus, tmp_path):
+        """Every inserted key must probe positive — the property the exact
+        path depends on (negatives skip the confirm join entirely)."""
+        store = _built(corpus, "k", 500, 1e-3, self.N_SLICES,
+                       out_dir=str(tmp_path))
+        assert store.n_slices == self.N_SLICES
+        assert len(store.paths) == self.N_SLICES
+        probed = bloom.with_sliced_bloom_probe(corpus, "k", store).toPandas()
+        assert probed.maybe_member.all()
+
+    def test_fp_rate_calibrated(self, spark, corpus):
+        """Probing 5000 DISJOINT keys: measured FP rate within 4x of the
+        theoretical whole-filter rate (small-sample slack), and far below
+        1 — slicing keeps the bound because the slice hash is independent
+        of the probe hashes."""
+        m_s, k, s = bloom.sliced_bloom_params(500, 1e-2, self.N_SLICES)
+        store = bloom.build_bloom_sliced(corpus, "k", m_s, k, s)
+        others = spark.createDataFrame(
+            pd.DataFrame({"k": [f"other_{i:05d}" for i in range(5000)]})
+        )
+        got = bloom.with_sliced_bloom_probe(others, "k", store).toPandas()
+        measured = got.maybe_member.mean()
+        theory = bloom.theoretical_fp_rate(m_s * s, k, 500)
+        assert measured <= max(4 * theory, 0.05), (measured, theory)
+
+    def test_dedup_exact_equals_anti_join(self, spark, old_new):
+        """confirm=True output ≡ left_anti join, including under forced
+        false positives (an undersized filter makes FPs certain — the
+        confirm join must repair every one of them), and the prebuilt
+        handle (the amortized daily loop) is identical."""
+        old, new = old_new
+        want = {
+            r["id"]
+            for r in new.join(old, "k", "left_anti").select("id").collect()
+        }
+        for fp in (1e-3, 0.5):  # 0.5 -> tiny filter, rampant FPs
+            got = bloom.bloom_dedup_against(
+                new, old, "k", fp_rate=fp, confirm=True,
+                n_slices=self.N_SLICES,
+            )
+            assert {r["id"] for r in got.select("id").collect()} == want, fp
+        store = _built(old, "k", 200, 1e-3, self.N_SLICES)
+        got_pre = bloom.bloom_dedup_against(new, old, "k", prebuilt=store)
+        assert {r["id"] for r in got_pre.select("id").collect()} == want
+        assert want and len(want) < 300  # non-vacuous both ways
+        # a prebuilt filter carries its own slice count
+        with pytest.raises(ValueError):
+            bloom.bloom_dedup_against(
+                new, old, "k", prebuilt=store, n_slices=self.N_SLICES + 1
+            )
+
+    def test_dedup_unconfirmed_never_keeps_a_duplicate(self, spark, old_new):
+        old, new = old_new
         got = bloom.bloom_dedup_against(
-            new, old, "k", fp_rate=1e-3, confirm=False
+            new, old, "k", fp_rate=1e-3, confirm=False,
+            n_slices=self.N_SLICES,
         ).toPandas()
         dup_ids = {i for i in range(300) if i % 3 == 0 and i < 200}
         assert not (set(got.id) & dup_ids)
         # approximate mode loses at most a small sliver of the new rows
         assert len(got) >= 0.95 * (300 - len(dup_ids))
+        # approximate + prebuilt never reads standing
+        store = _built(old, "k", 200, 1e-3, self.N_SLICES)
+        got_pre = bloom.bloom_dedup_against(
+            new, None, "k", confirm=False, prebuilt=store
+        ).toPandas()
+        assert not (set(got_pre.id) & dup_ids)
+        with pytest.raises(ValueError):
+            bloom.bloom_dedup_against(new, None, "k", prebuilt=store)
 
     def test_null_keys_consistent(self, spark):
         """NULL keys hash as a single value on both build and probe sides
@@ -115,48 +160,64 @@ class TestBloomFilter:
         old = spark.createDataFrame(
             pd.DataFrame({"k": pd.array(["a", None], dtype="string")})
         )
-        n_bits, k = bloom.bloom_params(2, 1e-2)
-        filt = bloom.build_bloom(old, "k", n_bits, k)
-        probed = bloom.with_bloom_probe(old, "k", filt, k).toPandas()
+        store = _built(old, "k", 2, 1e-2, self.N_SLICES)
+        probed = bloom.with_sliced_bloom_probe(old, "k", store).toPandas()
         assert probed.maybe_member.all()
 
+    def test_build_shape(self, spark, corpus):
+        """S=1 builds in ONE job with no shuffle (coalesce + treeAggregate);
+        S>1 writes two shuffles, both keyed by slice: the repartition that
+        bounds each fold task to ~one slice, and the reduceByKey that puts
+        exactly one slice in each streamed partition."""
+        sc = spark.sparkContext
+        group = f"bloom_build_shape_{self.N_SLICES}"
+        sc.setJobGroup(group, "bloom build shape")
+        try:
+            _built(corpus, "k", 500, 1e-3, self.N_SLICES)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs, shuffles = _group_stages(spark, group)
+        if self.N_SLICES == 1:
+            assert (jobs, shuffles) == (1, 0)
+        else:
+            assert shuffles == 2
 
-class TestSlicedBloom:
-    """Sliced (beyond-RAM) regime: per-slice bitmap FILES instead of one
-    broadcast blob.  Same exactness contracts as the single-bitmap path —
-    the slice hash is independent of the probe hashes, so each slice is a
-    classic Bloom filter over its own key subset."""
+    def test_default_files_owned_by_context(self, spark, corpus):
+        """Without out_dir the slice files live under the SparkContext's
+        SparkFiles root, which Spark deletes when the context stops — a
+        default build leaves nothing behind in the temp dir."""
+        import os
 
-    @pytest.fixture(scope="class")
-    def corpus(self, spark):
-        return spark.createDataFrame(
-            pd.DataFrame({"k": [f"key_{i:05d}" for i in range(500)]})
-        )
+        from pyspark import SparkFiles
+
+        store = _built(corpus, "k", 500, 1e-3, self.N_SLICES)
+        root = os.path.realpath(SparkFiles.getRootDirectory())
+        for p in store.paths:
+            assert os.path.realpath(p).startswith(root + os.sep)
+            assert os.path.exists(p)
+
+
+class TestSlicedBloom(TestBloomFilter):
+    """The same contracts at three slices — per-slice bitmap files, each a
+    classic Bloom filter over its key subset — plus the slice-specific
+    properties."""
+
+    N_SLICES = 3
 
     def test_params_derive_slices_from_budget(self):
         m_total, k_total = bloom.bloom_params(1_000_000, 1e-3)
-        m_s, k, s = bloom.sliced_bloom_params(
-            1_000_000, 1e-3, max_slice_bytes=250_000
-        )
-        assert k == k_total
-        assert s == math.ceil(m_total / (8 * 250_000))
-        assert m_s * s >= m_total and m_s % 8 == 0
+        m_s, k, s = bloom.sliced_bloom_params(1_000_000, 1e-3)
+        assert (m_s, k, s) == (m_total, k_total, 1)
+        # past MAX_SLICE_BYTES the smallest fitting slice count is derived
+        m_big, k_big = bloom.bloom_params(10**9, 1e-3)
+        m_s, k, s = bloom.sliced_bloom_params(10**9, 1e-3)
+        assert k == k_big
+        assert s == math.ceil(m_big / (8 * bloom.MAX_SLICE_BYTES)) == 2
+        assert m_s * s >= m_big and m_s % 8 == 0
+        assert m_s // 8 <= bloom.MAX_SLICE_BYTES
         # explicit slice count wins
         m_s4, _, s4 = bloom.sliced_bloom_params(1_000_000, 1e-3, n_slices=4)
         assert s4 == 4 and m_s4 >= m_total // 4
-        with pytest.raises(ValueError):
-            bloom.sliced_bloom_params(1_000_000, 1e-3)
-
-    def test_no_false_negatives_across_slices(self, spark, corpus, tmp_path):
-        """Every inserted key probes positive through its slice's memmap'd
-        file — including keys in slices that landed zero-filled."""
-        m_s, k, s = bloom.sliced_bloom_params(500, 1e-3, n_slices=5)
-        store = bloom.build_bloom_sliced(
-            corpus, "k", m_s, k, s, out_dir=str(tmp_path)
-        )
-        assert store.n_slices == 5 and len(store.paths) == 5
-        probed = bloom.with_sliced_bloom_probe(corpus, "k", store).toPandas()
-        assert probed.maybe_member.all()
 
     def test_empty_slices_get_zero_files(self, spark, tmp_path):
         """2 keys over 8 slices: ≥6 slices hold no key, get a zero-filled
@@ -186,54 +247,6 @@ class TestSlicedBloom:
         # a key routed to an empty (zero-filled) slice is DEFINITELY new
         empty_rows = got[~got.slice.isin(occupied)]
         assert len(empty_rows) > 50 and not empty_rows.maybe_member.any()
-
-    def test_sliced_matches_single_bitmap_fp_bound(self, spark, corpus):
-        """FP calibration survives slicing: measured rate on 5000 disjoint
-        keys within small-sample slack of the theoretical single-filter
-        bound (the property the independent slice hash is FOR)."""
-        m_s, k, s = bloom.sliced_bloom_params(500, 1e-2, n_slices=4)
-        store = bloom.build_bloom_sliced(corpus, "k", m_s, k, s)
-        others = spark.createDataFrame(
-            pd.DataFrame({"k": [f"other_{i:05d}" for i in range(5000)]})
-        )
-        got = bloom.with_sliced_bloom_probe(others, "k", store).toPandas()
-        theory = bloom.theoretical_fp_rate(m_s * s, k, 500)
-        assert got.maybe_member.mean() <= max(4 * theory, 0.05)
-
-    def test_sliced_dedup_equals_anti_join(self, spark):
-        """bloom_dedup_against(n_slices=S) ≡ left_anti join, including
-        under forced false positives, and the prebuilt_sliced reuse path
-        (the amortized daily loop) is identical."""
-        old = spark.createDataFrame(
-            pd.DataFrame({"k": [f"doc {i} text" for i in range(200)]})
-        )
-        new = spark.createDataFrame(
-            pd.DataFrame({
-                "id": range(300),
-                "k": [f"doc {i} text" if i % 3 == 0 else f"fresh {i} text"
-                      for i in range(300)],
-            })
-        )
-        want = {
-            r["id"]
-            for r in new.join(old, "k", "left_anti").select("id").collect()
-        }
-        for fp in (1e-3, 0.5):  # 0.5 -> tiny slices, rampant FPs
-            got = bloom.bloom_dedup_against(
-                new, old, "k", fp_rate=fp, confirm=True, n_slices=3
-            )
-            assert {r["id"] for r in got.select("id").collect()} == want, fp
-        m_s, k, s = bloom.sliced_bloom_params(200, 1e-3, n_slices=3)
-        store = bloom.build_bloom_sliced(old, "k", m_s, k, s)
-        got_pre = bloom.bloom_dedup_against(
-            new, old, "k", prebuilt_sliced=store
-        )
-        assert {r["id"] for r in got_pre.select("id").collect()} == want
-        assert want and len(want) < 300
-        with pytest.raises(ValueError):
-            bloom.bloom_dedup_against(
-                new, old, "k", prebuilt=(b"\x00", 1), n_slices=2
-            )
 
 
 def _brute_bm25(pdf, query, k1=1.2, b=0.75):

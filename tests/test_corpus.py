@@ -1357,8 +1357,11 @@ class TestUpsampleSources:
         assert "Exchange hashpartitioning" not in plan
 
 
-class TestDupSpanCountMethods:
-    def test_join_method_matches_window(self, spark):
+class TestDupSpanExpectedValues:
+    def test_window_count_expected_values(self, spark):
+        """The one count path on a hand-checked corpus: 'a..h' occurs in
+        docs 1, 2 and twice in doc 4, whose two copies are adjacent and
+        merge into one 16-word span; doc 3 shares no 8-gram."""
         docs = spark.createDataFrame(
             [
                 (1, "a b c d e f g h tail one"),
@@ -1368,20 +1371,18 @@ class TestDupSpanCountMethods:
             ],
             "doc_id long, text string",
         )
-        w = sorted(
-            map(tuple, corpus_ops.dup_span_stats(docs, n=8, count_method="window").collect())
+        spans = sorted(
+            map(tuple, corpus_ops.duplicate_spans(docs, n=8).collect())
         )
-        j = sorted(
-            map(tuple, corpus_ops.dup_span_stats(docs, n=8, count_method="join").collect())
+        assert spans == [(1, 1, 8), (2, 2, 9), (4, 1, 16)]
+        stats = sorted(
+            map(tuple, corpus_ops.dup_span_stats(docs, n=8).collect())
         )
-        assert w == j and len(w) > 0
-
-    def test_unknown_method_raises(self, spark):
-        docs = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError):
-            corpus_ops.duplicate_spans(docs, count_method="nope").collect()
+        assert stats == [
+            (1, 1, 8, 10, 0.8),
+            (2, 1, 8, 10, 0.8),
+            (4, 1, 16, 16, 1.0),
+        ]
 
 
 class TestPerplexityBuckets:

@@ -1,7 +1,7 @@
 """dedup_lines_against (operators/corpus): incremental CCNet line dedup of
 a shard against a standing corpus through a Bloom membership filter —
-exactness vs the batch operator, approximate-mode guarantees, prebuilt and
-sliced-filter parity."""
+exactness vs the batch operator, approximate-mode guarantees, and parity of
+prebuilt filters at one and three slices."""
 
 import pandas as pd
 import pytest
@@ -106,35 +106,29 @@ class TestIncrementalLineDedup:
             "_key"
         )
         n = st_keys.count()
-        n_bits, k = bloom.bloom_params(n, 1e-4)
-        bmp = bloom.build_bloom(st_keys, "_key", n_bits, k)
-        got_pre = {
-            r["doc_id"]: (r["text"], r["n_lines_kept"], r["n_lines_dropped"])
-            for r in corpus.dedup_lines_against(
-                shard, standing, prebuilt=(bmp, k)
-            ).collect()
-        }
-        assert got_pre == want
-
-        m_s, ks, s = bloom.sliced_bloom_params(n, 1e-4, n_slices=3)
-        store = bloom.build_bloom_sliced(st_keys, "_key", m_s, ks, s)
-        got_sl = {
-            r["doc_id"]: (r["text"], r["n_lines_kept"], r["n_lines_dropped"])
-            for r in corpus.dedup_lines_against(
-                shard, standing, prebuilt_sliced=store
-            ).collect()
-        }
-        assert got_sl == want
+        for n_slices in (1, 3):
+            m_s, ks, s = bloom.sliced_bloom_params(n, 1e-4, n_slices)
+            store = bloom.build_bloom_sliced(st_keys, "_key", m_s, ks, s)
+            got = {
+                r["doc_id"]: (r["text"], r["n_lines_kept"], r["n_lines_dropped"])
+                for r in corpus.dedup_lines_against(
+                    shard, standing, prebuilt=store
+                ).collect()
+            }
+            assert got == want, n_slices
 
     def test_requires_standing_unless_approx_prebuilt(self, spark, shard):
         with pytest.raises(ValueError):
             corpus.dedup_lines_against(shard, None)
         # approximate + prebuilt needs no standing frame at all
         st_keys = corpus._line_keys(shard, "doc_id", "text", "\n").select("_key")
-        n_bits, k = bloom.bloom_params(10, 1e-2)
-        bmp = bloom.build_bloom(st_keys.limit(0), "_key", n_bits, k)
+        m_s, k, s = bloom.sliced_bloom_params(0, 1e-2)
+        store = bloom.build_bloom_sliced(st_keys.limit(0), "_key", m_s, k, s)
+        assert store.n_slices == 1
+        with pytest.raises(ValueError):  # exact mode needs standing
+            corpus.dedup_lines_against(shard, None, prebuilt=store)
         out = corpus.dedup_lines_against(
-            shard, None, confirm=False, prebuilt=(bmp, k)
+            shard, None, confirm=False, prebuilt=store
         )
         # empty filter -> nothing in standing -> only within-shard dedup
         got = {r["doc_id"]: r["text"] for r in out.collect()}
