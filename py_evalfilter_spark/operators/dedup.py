@@ -60,8 +60,13 @@ def _ratio_col(a, b, mode: str):
       variant reads slightly HIGHER than fuzzywuzzy for substitution-heavy
       pairs (documented divergence; README).
     """
-    dist = F.levenshtein(a, b)
-    la, lb = F.length(a), F.length(b)
+    return _ratio_of(F.levenshtein(a, b), F.length(a), F.length(b), mode)
+
+
+def _ratio_of(dist, la, lb, mode: str):
+    """:func:`_ratio_col` from an edit distance and the two lengths — one
+    arithmetic for the ratio and its length bound, so the bound (dist :=
+    |la - lb|) is never below the ratio by a float rounding step."""
     if mode == "fuzz":
         # floor the length sum in BOTH numerator and denominator so two
         # empty strings score 100.0 (dist=0), matching _lev_ratio — flooring
@@ -99,7 +104,10 @@ def fuzzy_window_pairs(
     Shuffling the pair rows costs ~2x the text bytes and bought a measured
     3.9x on sf0.1/local[32] (4.4s -> 1.1s, 20 sources); at a 1000-executor
     cluster the gap is the difference between using 20 cores and all of
-    them.
+    them.  With a ``threshold``, pairs whose length difference alone already
+    caps the ratio at or below it are dropped before the rebalance: an
+    exact prefilter (the kept set is unchanged) that spares the shuffle and
+    the Levenshtein for them.
 
     Scale note: pass ``partition_col`` (the reference scans per source
     file).  ``partition_col=None`` reproduces a single global ordered scan —
@@ -127,6 +135,14 @@ def fuzzy_window_pairs(
         leads.select("doc_id", "__text", F.explode(cand).alias("c"))
         .filter(F.col("c.dup_id").isNotNull())
     )
+    if threshold is not None:
+        # exact length prefilter: dist >= |la - lb|, and the ratio falls as
+        # dist grows, so the ratio at dist = |la - lb| bounds it from above
+        # and round() keeps the order — a pair whose rounded bound already
+        # fails the threshold fails it after the Levenshtein too
+        la, lb = F.length("__text"), F.length("c.cand")
+        bound = _ratio_of(F.abs(la - lb), la, lb, ratio_mode)
+        pairs = pairs.filter(F.round(bound, 2) > threshold)
     if rebalance:
         # defaultParallelism, not int(spark.sql.shuffle.partitions): the
         # conf can be non-numeric ("auto" under AQE-managed runtimes), and
@@ -604,27 +620,40 @@ def _lsh_pairs(
             cands = new_old.unionByName(cands)
         sigs = sigs_new if sigs_old is None else sigs_new.unionByName(sigs_old)
         agree = F.aggregate(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
+            F.zip_with("a", "b", lambda x, y: (x == y).cast("int")),
             F.lit(0), lambda acc, v: acc + v,
         )
         cands = (
-            cands.distinct()
-            .join(sigs.toDF("doc_id", "sig_a"), "doc_id")
-            .join(sigs.toDF("dup_id", "sig_b"), "dup_id")
+            _with_both_sides(cands.distinct(), sigs, "signature")
             .filter(agree / F.lit(float(num_perm)) >= cut)
             .select("doc_id", "dup_id")
         )
-    pairs = (
-        cands.join(texts, "doc_id")
-        .withColumnRenamed("__text", "text_a")
-        .join(texts.withColumnRenamed("doc_id", "dup_id"), "dup_id")
-        .withColumnRenamed("__text", "text_b")
-    )
     jaccard_udf = _exact_jaccard_udf(unit, n)
     return (
-        pairs.withColumn("jaccard", jaccard_udf("text_a", "text_b"))
+        _with_both_sides(cands, texts, "__text")
+        .withColumn("jaccard", jaccard_udf("a", "b"))
         .filter(F.col("jaccard") >= threshold)
         .select("doc_id", "dup_id", "jaccard")
+    )
+
+
+def _with_both_sides(pairs: DataFrame, side: DataFrame, col: str) -> DataFrame:
+    """(doc_id, dup_id, a, b): each pair with `side`'s `col` for doc_id (a)
+    and for dup_id (b).  The SAME `side` plan is joined under two aliases,
+    so both broadcasts canonicalize alike and the second is a
+    ReusedExchange: `side` is scanned once.  A renamed copy (toDF,
+    withColumnRenamed) differs in its alias names and plans its own
+    broadcast and scan.  A `side` that reads a persisted frame still gets
+    two broadcasts: the two cached-scan references keep distinct output
+    attribute ids in their canonical form."""
+    return (
+        pairs.alias("p")
+        .join(side.alias("sa"), F.col("p.doc_id") == F.col("sa.doc_id"))
+        .join(side.alias("sb"), F.col("p.dup_id") == F.col("sb.doc_id"))
+        .select(
+            "p.doc_id", "p.dup_id",
+            F.col(f"sa.{col}").alias("a"), F.col(f"sb.{col}").alias("b"),
+        )
     )
 
 
@@ -858,7 +887,10 @@ def write_neardup_store(
     / ~1e11 docs × 16 band rows each, tens of thousands of buckets.
     `mode="append"` adds a shard's rows to both tables (Spark validates
     the bucket spec matches the existing tables); `append_neardup_store`
-    wraps that with the banding derivation.
+    wraps that with the banding derivation.  Bucketed writes go through
+    `tables.write_bucketed`, which clusters rows by bucket id first, so a
+    write adds at most `n_buckets` banded files whatever the shard's
+    partitioning.
 
     The sigs table is plain by default (`bucket_sigs=False`): the only
     consumer is the estimate filter, which joins it against the
@@ -939,17 +971,18 @@ def compact_neardup_store(
     n_buckets: int = 32,
     bucket_sigs: bool = False,
 ) -> None:
-    """Rewrite the store in place, collapsing append debris: each bucketed
-    append adds up to tasks×n_buckets new files, so after many shards the
-    banded scan pays file-open overhead proportional to append COUNT, not
-    data size.  Run this on the maintenance cadence a real pipeline would
-    (e.g. weekly for daily shards).  The rewrite stages through temp
-    tables then swaps, so a concurrent reader of the old tables in the
-    same session sees either the old or the new listing, and the banding
-    is REUSED from the stored table — documents are not re-banded.  The
-    superseded data directories are left on disk (their tables are
-    dropped); reclaim them with the storage layer's GC — the function
-    cannot know whether another engine still reads them."""
+    """Rewrite the store in place, collapsing append debris: each append
+    adds up to n_buckets banded files and a sigs file per write task, so
+    after many shards the scans pay file-open overhead proportional to
+    append COUNT, not data size; the rewrite merges them into at most
+    n_buckets banded files.  Run this on the maintenance cadence a real
+    pipeline would (e.g. weekly for daily shards).  The rewrite stages
+    through temp tables then swaps, so a concurrent reader of the old
+    tables in the same session sees either the old or the new listing, and
+    the banding is REUSED from the stored table — documents are not
+    re-banded.  The superseded data directories are left on disk (their
+    tables are dropped); reclaim them with the storage layer's GC — the
+    function cannot know whether another engine still reads them."""
     import uuid
 
     sigs, banded = read_neardup_store(spark, table_prefix)

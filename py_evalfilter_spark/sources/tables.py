@@ -188,7 +188,20 @@ def write_bucketed(
     with the rest of the stage outputs.  Iceberg's equivalent is a
     bucket(N, col) partition transform — same plan effect once the jar is
     present (see module docstring).
+
+    One file per bucket: the frame is first repartitioned on the writer's
+    own bucket-id expression, pmod(hash(bucket_cols), n_buckets) — the
+    expression Spark's bucketed writer assigns buckets with — so all rows
+    of a bucket land in one task and a write emits at most ``n_buckets``
+    files.  Left to the incoming partitioning, every task writes one file
+    per bucket it touches: a 4-task append into 32 buckets added 128
+    files, and a bucketed scan pays per file it opens, so an appended-to
+    table's reads grew with its append count instead of its rows.  The
+    repartition takes no partition count, so AQE may coalesce it; a
+    coalesced task still holds whole buckets.  The cost is one shuffle of
+    the written rows.
     """
+    df = df.repartition(F.pmod(F.hash(*bucket_cols), F.lit(n_buckets)))
     w = df.write.mode(mode).format("parquet").bucketBy(n_buckets, *bucket_cols)
     if sort_cols:
         w = w.sortBy(*sort_cols)

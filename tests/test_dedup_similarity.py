@@ -315,6 +315,7 @@ class TestDedup:
                 if f.endswith(".parquet")
             )
             assert files_after < files_before, (files_after, files_before)
+            assert files_after <= 4, files_after  # n_buckets
             # incremental over the compacted store still matches recompute
             new = docs.select(
                 (F.col("doc_id") + 9000).alias("doc_id"),
@@ -346,6 +347,70 @@ class TestDedup:
         finally:
             spark.sql(f"DROP TABLE IF EXISTS {prefix}_sigs")
             spark.sql(f"DROP TABLE IF EXISTS {prefix}_banded")
+
+    def test_neardup_store_append_adds_one_file_per_bucket(
+        self, spark, docs, tmp_path
+    ):
+        """append_neardup_store of a shard spread over more tasks than the
+        store has buckets adds at most n_buckets banded files: the bucketed
+        write clusters rows by bucket id, not one file per task x bucket."""
+        import os
+        import uuid
+
+        prefix = f"nd_{uuid.uuid4().hex[:8]}"
+        banded_dir = tmp_path / "store" / "banded"
+        dedup.write_neardup_store(
+            dedup.minhash_signatures(docs.select("doc_id", "text"), "doc_id", "text", n=3),
+            prefix, n_buckets=4, path=str(tmp_path / "store"),
+        )
+        n_files = lambda: sum(1 for f in os.listdir(banded_dir) if f.endswith(".parquet"))
+        try:
+            before = n_files()
+            shard = docs.select(
+                (F.col("doc_id") + 1000).alias("doc_id"), "text"
+            ).repartition(6)
+            sigs = dedup.minhash_signatures(shard, "doc_id", "text", n=3)
+            assert sigs.rdd.getNumPartitions() >= 4
+            dedup.append_neardup_store(sigs, prefix, n_buckets=4)
+            assert 0 < n_files() - before <= 4, (before, n_files())
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {prefix}_sigs")
+            spark.sql(f"DROP TABLE IF EXISTS {prefix}_banded")
+
+    @pytest.mark.parametrize("mode", ["maxlen", "fuzz"])
+    def test_fuzzy_window_length_prefilter_is_exact(self, spark, mode):
+        """The thresholded scan drops pairs on their length bound before
+        the Levenshtein; its output must equal the unthresholded scan
+        filtered afterwards, with null and empty texts in the window, and
+        the bound must actually reject pairs (non-vacuous)."""
+        rng = np.random.default_rng(7)
+        base = "the quick brown fox jumps over the lazy dog"
+        texts = []
+        for i in range(240):
+            cut = int(rng.integers(0, len(base) + 1))
+            t = base[:cut] + "".join(rng.choice(list("abc "), size=int(rng.integers(0, 4))))
+            texts.append({0: "", 1: None}.get(i % 17, t))
+        pdf = pd.DataFrame(
+            {"doc_id": range(len(texts)), "text": texts,
+             "source": [f"s{i % 3}" for i in range(len(texts))]}
+        )
+        df = spark.createDataFrame(pdf, "doc_id long, text string, source string")
+        kw = dict(order_col="doc_id", partition_col="source", lookahead=3,
+                  ratio_mode=mode)
+        every = dedup.fuzzy_window_pairs(df, "doc_id", "text", threshold=None, **kw)
+        for thr in (50.0, 80.0, 90.0):
+            got = dedup.fuzzy_window_pairs(df, "doc_id", "text", threshold=thr, **kw)
+            want = every.filter(F.col("ratio") > thr)
+            key = lambda d: sorted(map(tuple, d.select("doc_id", "dup_id", "ratio").collect()))
+            assert key(got) == key(want), (mode, thr)
+            assert len(key(want)), (mode, thr)
+        # non-vacuous: some non-null candidate's lengths differ by more than
+        # 20% of the longer one, which caps its ratio below 90 in both modes
+        ln = {i: len(t) for i, t in enumerate(texts) if t is not None}
+        assert any(
+            a in ln and b in ln and abs(ln[a] - ln[b]) > 0.2 * max(ln[a], ln[b])
+            for a, b in every.select("doc_id", "dup_id").collect()
+        )
 
     def test_minhash_incremental_banded_requires_sigs(self, spark, docs):
         import pytest

@@ -466,6 +466,45 @@ class TestNeardupStorePlan:
             spark.sql(f"DROP TABLE IF EXISTS {prefix}_sigs")
             spark.sql(f"DROP TABLE IF EXISTS {prefix}_banded")
 
+    def test_verify_join_scans_corpus_texts_once(self, spark, tmp_path):
+        """The verify join reads (doc_id, text) for both sides of a pair
+        from ONE texts plan: after an action, the executed incremental plan
+        scans the standing corpus once — the dup side's broadcast is a
+        ReusedExchange, not a second full corpus scan."""
+        import uuid
+
+        from py_evalfilter_spark.operators import dedup
+
+        corpus_dir = str(tmp_path / "corpus")
+        dq._read(spark, SF, "documents").select("doc_id", "text").limit(200) \
+            .write.parquet(corpus_dir)
+        docs = spark.read.parquet(corpus_dir)
+        shard = docs.limit(40).select(
+            (F.col("doc_id") + 10_000_000).alias("doc_id"), "text"
+        ).localCheckpoint()
+        prefix = f"ndplan_{uuid.uuid4().hex[:8]}"
+        dedup.write_neardup_store(
+            dedup.minhash_signatures(docs, "doc_id", "text", unit="word"),
+            prefix, n_buckets=4, path=str(tmp_path / "store"),
+        )
+        try:
+            s_sigs, s_banded = dedup.read_neardup_store(spark, prefix)
+            out = dedup.minhash_lsh_pairs_incremental(
+                shard, docs, "doc_id", "text", unit="word",
+                old_sigs=s_sigs, old_banded=s_banded,
+            )
+            assert out.collect()
+            # the adaptive plan's current (final) physical plan: its string
+            # would also print the initial plan, which scans per reference
+            final = out._jdf.queryExecution().executedPlan().executedPlan().toString()
+            scans = [l for l in final.splitlines()
+                     if "FileScan" in l and corpus_dir in l]
+            assert len(scans) == 1, final
+            assert "ReusedExchange" in final, final
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {prefix}_sigs")
+            spark.sql(f"DROP TABLE IF EXISTS {prefix}_banded")
+
 
 def _path_to_sort_merge_join(plan: str, needle: str) -> list[str]:
     """Plan nodes from the first node containing `needle` up through its

@@ -202,3 +202,38 @@ class TestStrictTarget:
             strict.collect()
         lax = df.select(gvb_target_col(F.col("_c6"), strict=False).alias("t")).collect()
         assert lax[0]["t"] is None
+
+
+class TestBucketedWrite:
+    def test_one_file_per_bucket(self, spark, tmp_path):
+        """write_bucketed clusters rows by the writer's bucket id before
+        writing: an 8-partition frame into 4 buckets lands as at most 4
+        files, each holding exactly one bucket id (pmod(hash(cols), 4),
+        the id Spark's bucketed writer and reader use), with every input
+        row intact."""
+        import uuid
+
+        df = spark.range(0, 2000, numPartitions=8).select(
+            (F.col("id") % 37).alias("k"), F.col("id").alias("v")
+        )
+        assert df.rdd.getNumPartitions() == 8
+        table, path = f"bw_{uuid.uuid4().hex[:8]}", tmp_path / "bw"
+        tables.write_bucketed(df, table, ["k"], 4, sort_cols=["k"], path=str(path))
+        try:
+            files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+            assert 0 < len(files) <= 4, files
+            per_file = (
+                spark.read.parquet(str(path))
+                .groupBy(F.input_file_name().alias("f"))
+                .agg(F.collect_set(F.pmod(F.hash("k"), F.lit(4))).alias("ids"))
+                .collect()
+            )
+            assert len(per_file) == len(files)
+            for r in per_file:
+                assert len(r["ids"]) == 1, r
+                # the file name's bucket suffix (part-…_0000N.c000…) agrees
+                assert f"_{r['ids'][0]:05d}." in r["f"], r
+            back = tables.read_bucketed(spark, table)
+            assert sorted(back.collect()) == sorted(df.collect())
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {table}")
