@@ -4,7 +4,8 @@ bench.py (guide §1.4).
 
 Times a chosen subset of the bench queries with the exact same consuming
 aggregation bench.py uses (bench.benched_df), labels jobs, and can dump
-`.explain("formatted")` for each query to plans/r08/.
+`.explain("formatted")` for each query to plans/r08/.  A catalog query
+that bench.py does not time (e.g. ann_ivf) is consumed with `count(*)`.
 
 Usage:
   SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 python bench_extra.py smote dedup_incremental
@@ -26,11 +27,18 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import bench  # noqa: E402  (frozen harness: reuse its CONSUME/benched_df)
+from py_evalfilter_spark.plans import driver_queries as dq  # noqa: E402
 from py_evalfilter_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPEATS = int(os.environ.get("BENCH_EXTRA_REPEATS", "2"))
 TAG = os.environ.get("BENCH_EXTRA_TAG", "before")
+
+
+def _benched(spark, name: str):
+    if name in bench.CONSUME:
+        return bench.benched_df(spark, name, SF_DIR)
+    return dq.QUERIES[name](spark, SF_DIR).selectExpr("count(*) AS n")
 
 
 def main() -> None:
@@ -45,7 +53,7 @@ def main() -> None:
     out: dict[str, float] = {}
     for name in names:
         if do_explain:
-            df = bench.benched_df(spark, name, SF_DIR)
+            df = _benched(spark, name)
             txt = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
@@ -60,7 +68,7 @@ def main() -> None:
             spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"{name} rep{i}")
             t0 = time.perf_counter()
-            bench.benched_df(spark, name, SF_DIR).collect()
+            _benched(spark, name).collect()
             dt = time.perf_counter() - t0
             best = dt if best is None or dt < best else best
         spark.sparkContext.setJobDescription(None)

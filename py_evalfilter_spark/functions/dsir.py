@@ -28,6 +28,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .hashing import md5_int, seeded_int
 from .textanalysis import WORD_RE
 
 _M = 1_000_003  # md5-uniform modulus shared with operators/corpus.py mixing
@@ -66,10 +67,7 @@ def _hashed_ngram_buckets(df: DataFrame, text_col: str, n_max: int, buckets: int
     exploded = out.withColumn("_gram", F.explode(F.concat(*gram_cols)))
     return exploded.withColumn(
         "bucket",
-        F.pmod(
-            F.conv(F.substring(F.md5("_gram"), 1, 8), 16, 10).cast("long"),
-            F.lit(buckets),
-        ),
+        F.pmod(md5_int("_gram"), F.lit(buckets)),
     ).drop("_words", "_gram", *[f"_grams{n}" for n in range(2, n_max + 1)])
 
 
@@ -171,17 +169,7 @@ def gumbel_key(weight_col: str, id_col: str, seed: int):
     """logw + Gumbel(md5-uniform(id, seed)) — the deterministic
     Efraimidis-Spirakis/Gumbel selection key (shared by dsir_resample and
     its parity tests)."""
-    u = (
-        F.pmod(
-            F.conv(
-                F.substring(F.md5(F.concat_ws(":", F.col(id_col), F.lit(seed))), 1, 8),
-                16,
-                10,
-            ).cast("long"),
-            F.lit(_M),
-        )
-        + F.lit(0.5)
-    ) / F.lit(float(_M))
+    u = (F.pmod(seeded_int(id_col, seed), F.lit(_M)) + F.lit(0.5)) / F.lit(float(_M))
     return F.col(weight_col) + (-F.log(-F.log(u)))
 
 

@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .hashing import md5_int
+
 # ---------------------------------------------------------------------------
 # language ID — character/stopword n-gram heuristic over the 5 driver langs
 # ---------------------------------------------------------------------------
@@ -353,16 +355,7 @@ def _md5_uniform_weight(token, seed: int):
     every engine recomputes the identical weight from the token bytes, so
     the scoring carries a full value oracle with no model artifact to
     ship."""
-    h = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(f"w:{seed}:"), token)), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1_000_000
-    )
+    h = md5_int(F.concat(F.lit(f"w:{seed}:"), token)) % 1_000_000
     return (h / 1_000_000.0) * 2 - 1
 
 

@@ -43,6 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int
+
 
 def _round_half_up(x: "np.ndarray", decimals: int) -> "np.ndarray":
     """Round-half-away-from-zero, matching the oracle's DuckDB ROUND (and
@@ -309,15 +311,7 @@ def _pairs_tiled(
     for c, nbv in tiles.items():
         nb_expr = F.when(F.col("cluster") == c, F.lit(nbv)).otherwise(nb_expr)
     blk = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":tile"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long"),
+        md5_int(F.concat(F.col("doc_id").cast("string"), F.lit(":tile"))),
         nb_expr.cast("long"),
     ).cast("int")
     with_blk = assigned.withColumn("_nb", nb_expr).withColumn("blk", blk)
@@ -487,16 +481,9 @@ def semdedup_pairs(
         n_sub = F.lit(None).cast("int")
         for c, s in over.items():
             n_sub = F.when(F.col("cluster") == c, F.lit(s)).otherwise(n_sub)
+        h = md5_int(F.col("doc_id").cast("string"))
         sub = F.when(
-            n_sub.isNotNull(),
-            F.pmod(
-                F.conv(
-                    F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-                    16,
-                    10,
-                ).cast("long"),
-                n_sub.cast("long"),
-            ).cast("int"),
+            n_sub.isNotNull(), F.pmod(h, n_sub.cast("long")).cast("int")
         ).otherwise(F.lit(0))
     assigned = assigned.withColumn("sub", sub)
     if tile_size:

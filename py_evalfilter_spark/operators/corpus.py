@@ -22,10 +22,10 @@ Scale notes (100 TB):
   * pack_sequences: one window per pack group.  Pack within bounded groups
     (source × shard), never a single global ORDER BY — a global pack order
     is a single-partition sort at corpus scale.
-  * mix_sources: pure map-side filter against a broadcast rates dim; the
-    md5-derived uniform is engine-portable (same idiom as
-    vectorize.hashing_bucket_expr) so the exact sample is reproducible
-    anywhere.
+  * mix_sources / temperature_mix / upsample_sources: one rate sampler,
+    a pure map-side filter against a broadcast rates dim; the md5-derived
+    uniform (functions/hashing.uniform) is engine-portable, so the exact
+    sample is reproducible anywhere.
 """
 
 from __future__ import annotations
@@ -34,6 +34,8 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.hashing import md5_int, seeded_int, uniform
 
 if TYPE_CHECKING:
     from .bloom import SlicedBloom
@@ -347,10 +349,7 @@ def cap_per_group(
     whatever the ingest happened to write first.  One window Exchange."""
     from pyspark.sql import Window
 
-    u = F.conv(
-        F.substring(F.md5(F.concat_ws(":", F.col(id_col), F.lit(seed))), 1, 8), 16, 10
-    ).cast("long")
-    w = Window.partitionBy(by).orderBy(u, id_col)
+    w = Window.partitionBy(by).orderBy(seeded_int(id_col, seed), id_col)
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= max_per_group)
@@ -425,18 +424,26 @@ def mix_sources(
     The rates dict joins as a broadcast dim table; rows whose source has no
     rate are dropped (explicit mixing contract).  Pure map-side — no corpus
     shuffle."""
-    spark = df.sparkSession
-    rates_df = spark.createDataFrame(
+    return _sample_at_rates(
+        df, _rates_frame(df, rates, source_col), seed, id_col, source_col
+    )
+
+
+def _rates_frame(df: DataFrame, rates: dict[str, float], source_col: str) -> DataFrame:
+    return df.sparkSession.createDataFrame(
         sorted(rates.items()), f"{source_col} string, rate double"
     )
-    u = (
-        F.conv(F.substring(F.md5(F.concat_ws(":", F.col(id_col), F.lit(seed))), 1, 8), 16, 10)
-        .cast("long")
-        % 1_000_000
-    ) / 1_000_000.0
+
+
+def _sample_at_rates(
+    df: DataFrame, rates_df: DataFrame, seed: int, id_col: str, source_col: str
+) -> DataFrame:
+    """The one rate sampler: keep a row iff u(id, seed) < its source's rate
+    in the (source, rate) frame, joined as a broadcast dim; rows whose
+    source has no rate drop."""
     return (
         df.join(F.broadcast(rates_df), source_col)
-        .withColumn("u", u)
+        .withColumn("u", uniform(id_col, seed))
         .filter(F.col("u") < F.col("rate"))
         .drop("u", "rate")
     )
@@ -462,23 +469,12 @@ def upsample_sources(
     Plan shape: broadcast rates dim + a guarded sequence explode — pure
     map-side; output size is Σ n_s·rate_s by construction, so the explode
     amplification is the operator's contract, not a hazard."""
-    spark = df.sparkSession
-    rates_df = spark.createDataFrame(
-        sorted(rates.items()), f"{source_col} string, rate double"
-    )
-    u = (
-        F.conv(
-            F.substring(F.md5(F.concat_ws(":", F.col(id_col), F.lit(seed))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % 1_000_000
-    ) / 1_000_000.0
+    u = uniform(id_col, seed)
     n_copies = (
         F.floor("rate") + F.when(u < F.col("rate") - F.floor("rate"), 1).otherwise(0)
     ).cast("int")
     return (
-        df.join(F.broadcast(rates_df), source_col)
+        df.join(F.broadcast(_rates_frame(df, rates, source_col)), source_col)
         .withColumn("_nc", n_copies)
         .filter(F.col("_nc") >= 1)  # sequence(0, -1) DESCENDS — guard first
         .withColumn(rep_col, F.explode(F.sequence(F.lit(0), F.col("_nc") - 1)))
@@ -506,13 +502,11 @@ def shard_corpus(
     corpus-wide ORDER BY rand()."""
     from pyspark.sql import Window
 
-    u = F.md5(F.col(id_col).cast("string"))
-    shard = F.pmod(
-        F.conv(F.substring(u, 1, 8), 16, 10).cast("long"), F.lit(n_shards)
-    ).cast("int")
+    key = F.col(id_col).cast("string")
+    shard = F.pmod(md5_int(key), F.lit(n_shards)).cast("int")
     w = Window.partitionBy("shard").orderBy("_u")
     return (
-        df.withColumn("_u", u)
+        df.withColumn("_u", F.md5(key))
         .withColumn("shard", shard)
         .withColumn("pos", F.row_number().over(w) - 1)
         .drop("_u")
@@ -685,9 +679,9 @@ def sample_to_token_budget(
     docs whose source has no budget row are dropped (budget 0)."""
     from pyspark.sql import Window
 
-    u = F.md5(F.col(id_col).cast("string"))
-    b = F.conv(F.substring(u, 1, (bucket_bits + 3) // 4), 16, 10).cast("long")
-    rows = df.withColumn("_u", u).withColumn("_b", b)
+    key = F.col(id_col).cast("string")
+    b = md5_int(key, nhex=(bucket_bits + 3) // 4)
+    rows = df.withColumn("_u", F.md5(key)).withColumn("_b", b)
     per_bucket = rows.groupBy(source_col, "_b").agg(
         F.sum(tokens_col).alias("_bt")
     )
@@ -769,20 +763,8 @@ def temperature_mix(
     computed FROM the corpus's own source distribution instead of supplied
     by hand.  Same md5-uniform keep test, same broadcast-dim plan shape —
     the rates frame is ≤ #sources rows by construction."""
-    rates_df = temperature_rates(df, alpha, frac, source_col)
-    u = (
-        F.conv(
-            F.substring(F.md5(F.concat_ws(":", F.col(id_col), F.lit(seed))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % 1_000_000
-    ) / 1_000_000.0
-    return (
-        df.join(F.broadcast(rates_df), source_col)
-        .withColumn("u", u)
-        .filter(F.col("u") < F.col("rate"))
-        .drop("u", "rate")
+    return _sample_at_rates(
+        df, temperature_rates(df, alpha, frac, source_col), seed, id_col, source_col
     )
 
 

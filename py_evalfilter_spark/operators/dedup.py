@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.hashing import md5_int
 from ..pinning import PinScope
 from ..pinning import pin as _pin
 
@@ -1055,8 +1056,8 @@ def simhash_signatures(
         ).alias("tok"),
     ).select(
         "doc_id",
-        F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long").alias("hi"),
-        F.conv(F.substring(F.md5("tok"), 9, 8), 16, 10).cast("long").alias("lo"),
+        md5_int("tok").alias("hi"),
+        md5_int("tok", 9).alias("lo"),
     )
 
     def bit(i: int):

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import seeded_int
+
 
 def _release_local_checkpoint(df: DataFrame) -> None:
     """Best-effort unpersist of a localCheckpoint()'s backing RDD blocks.
@@ -198,12 +200,8 @@ def cluster_aware_split(
     withc = df.join(comp, id_col, "left").withColumn(
         "comp", F.coalesce("comp", F.col(id_col))
     )
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws(":", F.col("comp"), F.lit(seed))), 1, 8), 16, 10
-    ).cast("long")
-    return withc.withColumn("fold", F.pmod(h, F.lit(n_folds)).cast("int")).drop(
-        "comp"
-    )
+    fold = F.pmod(seeded_int("comp", seed), F.lit(n_folds)).cast("int")
+    return withc.withColumn("fold", fold).drop("comp")
 
 
 def dedup_keep_canonical(

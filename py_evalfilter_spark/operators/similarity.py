@@ -7,11 +7,15 @@
   bucket-join candidates (+ optional multi-probe via several independent
   tables) → exact cosine re-rank.  Scale path #1; recall measured against
   brute force in tests.
-* ivf_topk — inverted-file index: seeded k-means cells + nprobe probing +
-  exact re-rank.  Scale path #2; at rest the cell id becomes a partition
-  column so queries scan only nprobe partitions.
+* ivf_topk — inverted-file index: clustering.kmeans_fit cells fitted on
+  a hash-sampled subset, nearest-nprobe L2 probing with the same Arrow
+  matmul kernels (clustering._assign/_assign_topm) + exact cosine
+  re-rank.  Scale path #2; at rest the cell id becomes a partition column
+  so queries scan only nprobe partitions.  No Spark ML.
 
-All randomness is seeded numpy — identical planes on every executor/run.
+All randomness is seeded and independent of partitioning: the hyperplanes
+are seeded numpy; the IVF fit sample is functions/hashing.uniform and the
+k-means seeds are kmeans_fit's md5 order.
 """
 
 from __future__ import annotations
@@ -19,6 +23,9 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions.hashing import uniform
+from . import clustering
 
 
 def cosine_expr(a: str, b: str):
@@ -130,60 +137,46 @@ def ivf_topk(
     ``n_centroids`` cells; each query probes its ``nprobe`` nearest cells and
     exact-re-ranks only those candidates (candidate fraction ≈ nprobe/n_centroids).
 
-    Physical shape (no driver-side collection of either side):
-      * KMeans fit is Spark ML (seeded, deterministic) on a seeded Bernoulli
-        sample BY DEFAULT: ``fit_fraction=None`` derives the fraction so the
-        fit sees ~``fit_rows_per_centroid * n_centroids`` rows (the sizing
-        count is a parquet count-pushdown scan) — at 10^9 vectors the fit is
-        a bounded sample job, never a full-corpus ML pass.  Pass an explicit
-        fraction to override.  Full-probe exactness is independent of the
-        centroids (gated by ann_ivf_fullprobe ≡ brute force), so correctness
-        holds for any fit sample;
-      * cell assignment is one model.transform pass stored WITH the data
-        (at scale the assignment is precomputed once and persisted as a
-        partition column, so a query touches only nprobe partitions —
+    Physical shape — clustering.py's k-means and its Arrow matmul kernels,
+    no Spark ML:
+      * the fit is :func:`clustering.kmeans_fit` (md5-ordered seeds, fixed
+        Lloyd iterations, rounded means) on the hash-sampled set
+        ``u(id, seed) < fit_fraction`` (functions/hashing.uniform), so the
+        sample does not depend on partitioning.  ``fit_fraction=None``
+        derives the fraction so the fit sees ~``fit_rows_per_centroid *
+        n_centroids`` rows (the sizing count is a parquet count-pushdown
+        scan) — at 10^9 vectors the fit is a bounded sample job, never a
+        full-corpus pass.  The fit collects k seeds and k×dim means per
+        iteration (its bounded contract) and raises if the sample holds
+        fewer than ``n_centroids`` rows.  Full-probe exactness is
+        independent of the centroids (gated by ann_ivf_fullprobe ≡ brute
+        force), so correctness holds for any fit sample;
+      * cell assignment is one map-only ``_assign`` pass stored WITH the
+        data (at scale the assignment is precomputed once and persisted as
+        a partition column, so a query touches only nprobe partitions —
         classic IVF pruning);
-      * the query→cell probe list is a crossJoin of the query frame with
-        the broadcast ``n_centroids``-row centroid table, cosine scored
-        JVM-side, top-nprobe per query (window partitioned by qid) —
-        queries never leave the cluster.
+      * the query→cell probe list is ``_assign_topm(m=nprobe)`` over the
+        query frame: the same rounded L2² the fit minimizes, ties to the
+        lowest cell, map-only — queries never leave the cluster.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     d = _as_double_vec(data, id_col, vec_col)
-    dm = d.withColumn("fvec", array_to_vector("vec"))
     if fit_fraction is None:
         target = fit_rows_per_centroid * n_centroids
         n = data.count()  # count pushdown: reads no column data
         fit_fraction = min(1.0, target / max(n, 1))
-    fit_df = dm.sample(fraction=fit_fraction, seed=seed) if fit_fraction < 1.0 else dm
-    km = KMeans(k=n_centroids, seed=seed, featuresCol="fvec", predictionCol="cell")
-    model = km.fit(fit_df)
-    assigned = model.transform(dm).select("vec_id", "vec", "cell")
-
-    # tiny (n_centroids-row) table, broadcast to every query partition
-    spark = data.sparkSession
-    cent_rows = [
-        (int(i), [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    cents = spark.createDataFrame(cent_rows, ["cell", "cvec"])
+    fit_set = d
+    if fit_fraction < 1.0:
+        fit_set = d.filter(uniform("vec_id", seed) < fit_fraction)
+    centroids = clustering.kmeans_fit(
+        fit_set, vec_col="vec", id_col="vec_id", k=n_centroids, seed=seed
+    )
+    assigned = clustering._assign(d, centroids, "vec_id").select(
+        "vec_id", "vec", F.col("cluster").alias("cell")
+    )
     q = _as_double_vec(queries, id_col, vec_col)
     qdf = q.select(F.col("vec_id").alias("qid"), F.col("vec").alias("qvec"))
-    # zero-norm guard mirrors the normalized-centroid math (norm floor 1e-12)
-    dot = F.aggregate(
-        F.zip_with("qvec", "cvec", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    nq = F.sqrt(F.aggregate("qvec", F.lit(0.0), lambda acc, x: acc + x * x))
-    nc = F.sqrt(F.aggregate("cvec", F.lit(0.0), lambda acc, x: acc + x * x))
-    csim = dot / (F.greatest(nq, F.lit(1e-12)) * F.greatest(nc, F.lit(1e-12)))
-    wprobe = Window.partitionBy("qid").orderBy(F.col("csim").desc(), F.col("cell"))
-    probes = (
-        qdf.crossJoin(F.broadcast(cents))
-        .select("qid", "cell", csim.alias("csim"))
-        .withColumn("pr", F.row_number().over(wprobe))
-        .filter(F.col("pr") <= nprobe)
-        .select("qid", "cell")
+    probes = clustering._assign_topm(q, centroids, "vec_id", nprobe).select(
+        F.col("vec_id").alias("qid"), F.col("cluster").alias("cell")
     )
 
     cands = (

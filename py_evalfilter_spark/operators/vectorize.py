@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int
 from ..functions.textfeats import analyzer_udf
 
 
@@ -253,8 +254,7 @@ def hashing_bucket_expr(term, n_features: int):
     md5 is identical across engines (unlike xxhash64/murmur3), so the
     hashing vectorizer carries a DuckDB oracle:
     ``CAST('0x' || substr(md5(term),1,8) AS BIGINT) % n``."""
-    h = F.conv(F.substring(F.md5(term), 1, 8), 16, 10).cast("long")
-    return F.pmod(h, F.lit(n_features)).cast("int")
+    return F.pmod(md5_int(term), F.lit(n_features)).cast("int")
 
 
 def hashing_sign_expr(term):
@@ -262,8 +262,7 @@ def hashing_sign_expr(term):
     stream from the bucket (chars 1-8), mirroring sklearn's
     alternate_sign: collisions cancel in expectation instead of
     accumulating."""
-    nibble = F.conv(F.substring(F.md5(term), 9, 1), 16, 10).cast("int")
-    return (F.lit(1) - (nibble % 2) * 2).cast("long")
+    return (F.lit(1) - (md5_int(term, 9, 1, dtype="int") % 2) * 2).cast("long")
 
 
 def transform_hashing(

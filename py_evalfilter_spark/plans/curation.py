@@ -44,6 +44,7 @@ length filter → fuzzy dedup → save) to the corpus-scale curation flow.
 
 from __future__ import annotations
 
+import functools
 from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -396,10 +397,14 @@ def curate_corpus_staged(
     def no_obs(df: DataFrame, stage: str) -> DataFrame:
         return df
 
+    # read the documents table at most once (each read costs a schema job),
+    # and only when a stage that is not resumed builds from it
+    documents = functools.cache(lambda: _documents(o))
+
     def build_filtered() -> DataFrame:
         if standing_path is not None:
             o.standing = spark.read.parquet(standing_path)
-        return _filtered(_documents(o), o, no_obs, stage_pins, pin_out=False)
+        return _filtered(documents(), o, no_obs, stage_pins, pin_out=False)
 
     filtered_cfg = {
         "quality_min": quality_min,
@@ -437,7 +442,7 @@ def curate_corpus_staged(
             "source_token_budget": source_token_budget,
             "budget": budget,
         },
-        lambda: _packed(deduped, _documents(o), o, no_obs),
+        lambda: _packed(deduped, documents(), o, no_obs),
     )
     if n_shards is None:
         return packed, manifests

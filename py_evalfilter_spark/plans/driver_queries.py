@@ -1750,9 +1750,9 @@ WHERE NOT list_contains(f.dropped, r.rn) AND length(r.text) > 50
 
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN top-5 on the SAMPLED-fit path (fit_fraction=0.5) — the scale
-    default: at 10^9 vectors KMeans must never be a full-corpus job, and
-    ann_ivf_fullprobe proves correctness is fit-independent.  Rows-only;
-    recall + determinism pinned in pytest."""
+    default: at 10^9 vectors the k-means fit must never be a full-corpus
+    job, and ann_ivf_fullprobe proves correctness is fit-independent.
+    Rows-only; recall + determinism pinned in pytest."""
     from ..operators import similarity
 
     emb = _read(spark, sf_dir, "embeddings")

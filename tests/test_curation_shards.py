@@ -157,11 +157,23 @@ class TestShardedStage:
         with pytest.raises(RuntimeError, match="shard rollup undercounts"):
             curation.curate_corpus_staged(spark, SF, out, **KW)
 
-    def test_upstream_change_invalidates_sharded(self, spark, tmp_path):
+    def test_upstream_change_invalidates_sharded(self, spark, tmp_path, monkeypatch):
+        # each documents read costs a schema-inference job: a fresh run
+        # reads the table once, and a re-pack (filtered resumed) once
+        reads = []
+        real = curation._documents
+
+        def counted(o):
+            reads.append(o.sf_dir)
+            return real(o)
+
+        monkeypatch.setattr(curation, "_documents", counted)
         out = str(tmp_path / "curated")
         _, m1 = curation.curate_corpus_staged(spark, SF, out, **KW)
+        assert len(reads) == 1
         _, m2 = curation.curate_corpus_staged(
             spark, SF, out, budget=64, n_shards=N_SHARDS
         )
+        assert len(reads) == 2
         assert m2["packed"]["resumed"] is False
         assert m2["sharded"]["resumed"] is False

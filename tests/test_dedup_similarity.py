@@ -668,10 +668,23 @@ class TestHashAndRatioPrimitives:
         assert sorted(out["doc_id"].tolist()) == [1, 3]
 
 
+def _relation_roots(df) -> list[str]:
+    """Root paths of the file relations df's analyzed plan reads (the
+    analyzed plan, so a cached subtree still shows its source)."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    roots = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRelation":
+            paths = leaf.relation().location().rootPaths()
+            roots += [paths.apply(j).toUri().getPath().rstrip("/") for j in range(paths.size())]
+    return roots
+
+
 class TestAnnScaleHardening:
     def test_ivf_sampled_fit_fullprobe_still_exact(self, spark):
         """Full probe must equal brute force REGARDLESS of which sample the
-        KMeans centroids were fitted on (correctness is centroid-independent
+        k-means centroids were fitted on (correctness is centroid-independent
         at nprobe = n_centroids) — the scale path fits on a seeded sample."""
         emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
         q = emb.filter(F.col("vec_id") < 3)
@@ -684,23 +697,34 @@ class TestAnnScaleHardening:
         b = ivf[cols].sort_values(cols).reset_index(drop=True)
         assert a.equals(b)
 
-    def test_ivf_probe_selection_is_plan_side(self, spark):
-        """The probe list must be computed as DataFrame ops (broadcast
-        centroid table + window), never by collecting the query set."""
+    def test_ivf_probe_selection_is_plan_side(self, spark, tmp_path):
+        """The probe list is computed as DataFrame ops (the map-only
+        _assign_topm over the query frame), never by collecting the query
+        set.  kmeans_fit's own collects (k seeds, k×dim means per
+        iteration) read only the data side and are allowed: the queries
+        are their own relation, and the guard fails only on a collect
+        whose plan reads it."""
         emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-        q = emb.filter(F.col("vec_id") < 3)
+        q_dir = str(tmp_path / "queries")
+        emb.filter(F.col("vec_id") < 3).write.parquet(q_dir)
+        q = spark.read.parquet(q_dir)
         import unittest.mock as mock
 
-        from pyspark.sql import DataFrame
-
-        real_collect = DataFrame.collect
+        # patch the concrete class: pyspark.sql.DataFrame is only its base
+        frame_cls = type(emb)
+        real_collect = frame_cls.collect
+        data_collects = []
 
         def guarded(self):
-            raise AssertionError("ivf_topk collected a DataFrame driver-side")
+            if q_dir in _relation_roots(self):
+                raise AssertionError("ivf_topk collected the query set driver-side")
+            data_collects.append(1)
+            return real_collect(self)
 
-        with mock.patch.object(DataFrame, "collect", guarded):
+        with mock.patch.object(frame_cls, "collect", guarded):
             out = similarity.ivf_topk(emb, q, k=5, n_centroids=8, nprobe=2)
-        # plan construction did not collect; executing it now works
+        assert data_collects  # the fit ran through the guard
+        # plan construction did not collect the queries; executing it works
         assert out.count() > 0
 
     def test_hyperplane_bucket_plan_bounded_at_real_dims(self, spark):

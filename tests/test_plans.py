@@ -496,14 +496,33 @@ class TestNeardupStorePlan:
             assert out.collect()
             # the adaptive plan's current (final) physical plan: its string
             # would also print the initial plan, which scans per reference
-            final = out._jdf.queryExecution().executedPlan().executedPlan().toString()
-            scans = [l for l in final.splitlines()
-                     if "FileScan" in l and corpus_dir in l]
-            assert len(scans) == 1, final
-            assert "ReusedExchange" in final, final
+            final = out._jdf.queryExecution().executedPlan().executedPlan()
+            # match scans by root path: the printed `Location:` is cut to
+            # spark.sql.maxMetadataStringLength characters
+            scans = [r for r in _file_scan_roots(final) if r == corpus_dir]
+            assert len(scans) == 1, final.toString()
+            assert "ReusedExchange" in final.toString(), final.toString()
         finally:
             spark.sql(f"DROP TABLE IF EXISTS {prefix}_sigs")
             spark.sql(f"DROP TABLE IF EXISTS {prefix}_banded")
+
+
+def _file_scan_roots(plan) -> list[str]:
+    """Root paths of every FileSourceScanExec in an executed (JVM) plan,
+    one entry per scan node, walking into AQE query stages; a
+    ReusedExchange is a leaf, so a reused scan is not counted twice."""
+    roots, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "FileSourceScanExec":
+            paths = node.relation().location().rootPaths()
+            roots += [paths.apply(i).toUri().getPath().rstrip("/") for i in range(paths.size())]
+        if name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        kids = node.children()
+        stack += [kids.apply(i) for i in range(kids.size())]
+    return roots
 
 
 def _path_to_sort_merge_join(plan: str, needle: str) -> list[str]:
