@@ -16,12 +16,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
-def md5_int(expr, start: int = 1, nhex: int = 8, dtype: str = "long"):
-    """Hex digits ``start .. start+nhex-1`` (1-based) of ``md5(expr)`` as an
-    integer column: ``conv(substring(md5(expr), start, nhex), 16, 10)``
-    cast to `dtype`.  Eight digits fit a ``long`` exactly (up to 2^32 − 1);
-    the hashing vectorizer's one-nibble sign bit casts to ``int``."""
-    return F.conv(F.substring(F.md5(expr), start, nhex), 16, 10).cast(dtype)
+def md5_int(expr, start: int = 1, nhex: int = 8):
+    """Hex digits ``start .. start+nhex-1`` (1-based) of ``md5(expr)`` as a
+    ``long`` column: ``conv(substring(md5(expr), start, nhex), 16, 10)``.
+    Eight digits fit a ``long`` exactly (up to 2^32 − 1)."""
+    return F.conv(F.substring(F.md5(expr), start, nhex), 16, 10).cast("long")
 
 
 def seeded_int(id_col: str, seed):

@@ -262,7 +262,7 @@ def hashing_sign_expr(term):
     stream from the bucket (chars 1-8), mirroring sklearn's
     alternate_sign: collisions cancel in expectation instead of
     accumulating."""
-    return (F.lit(1) - (md5_int(term, 9, 1, dtype="int") % 2) * 2).cast("long")
+    return F.lit(1) - (md5_int(term, 9, 1) % 2) * 2
 
 
 def transform_hashing(

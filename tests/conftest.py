@@ -31,3 +31,11 @@ def transcripts_sdf(spark, transcripts_pdf):
 @pytest.fixture(scope="session")
 def profiles_sdf(spark, profiles_pdf):
     return spark.createDataFrame(profiles_pdf)
+
+
+def relation_root_paths(relation) -> list[str]:
+    """Root paths of a JVM file relation (the `relation()` of a
+    FileSourceScanExec or a LogicalRelation), as paths without a trailing
+    slash — matched by value, not in a plan string that Spark truncates."""
+    paths = relation.location().rootPaths()
+    return [paths.apply(i).toUri().getPath().rstrip("/") for i in range(paths.size())]

@@ -3,6 +3,7 @@
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import relation_root_paths
 from pyspark.sql import functions as F
 
 from py_evalfilter_spark.operators import dedup, similarity
@@ -676,8 +677,7 @@ def _relation_roots(df) -> list[str]:
     for i in range(leaves.size()):
         leaf = leaves.apply(i)
         if leaf.getClass().getSimpleName() == "LogicalRelation":
-            paths = leaf.relation().location().rootPaths()
-            roots += [paths.apply(j).toUri().getPath().rstrip("/") for j in range(paths.size())]
+            roots += relation_root_paths(leaf.relation())
     return roots
 
 

@@ -7,6 +7,7 @@ nodes in the JVM as-of join, scalar-UDF prunability, and AQE enablement.
 """
 
 import pytest
+from conftest import relation_root_paths
 from pyspark.sql import functions as F
 
 from py_evalfilter_spark.functions import textfeats
@@ -516,8 +517,7 @@ def _file_scan_roots(plan) -> list[str]:
         node = stack.pop()
         name = node.getClass().getSimpleName()
         if name == "FileSourceScanExec":
-            paths = node.relation().location().rootPaths()
-            roots += [paths.apply(i).toUri().getPath().rstrip("/") for i in range(paths.size())]
+            roots += relation_root_paths(node.relation())
         if name.endswith("QueryStageExec"):
             stack.append(node.plan())
         kids = node.children()
