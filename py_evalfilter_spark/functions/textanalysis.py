@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import gate
 from .hashing import md5_int
 
 # ---------------------------------------------------------------------------
@@ -211,15 +212,6 @@ def unigram_model(
     return UnigramLM(model, math.log((dropped_mass + smoothing) / denom), kept_count)
 
 
-# Broadcast gate for the scoring join: one model row is a short term plus a
-# double (~50 B serialized); 2M rows ≈ 100 MB — comfortably inside executor
-# broadcast memory, far past any capped vocabulary.  An UNKNOWN-size model
-# gets no hint at all: the forced F.broadcast of an unbounded frame was the
-# r3 100×-scale hazard (it bypasses autoBroadcastJoinThreshold and OOMs
-# executors instead of degrading to a shuffle join).
-LM_BROADCAST_MAX_ROWS = 2_000_000
-
-
 def with_unigram_logprob(
     df: DataFrame,
     model: DataFrame,
@@ -228,7 +220,6 @@ def with_unigram_logprob(
     text_col: str = "text",
     out: str = "avg_logprob",
     model_rows: int | None = None,
-    broadcast_max_rows: int = LM_BROADCAST_MAX_ROWS,
 ) -> DataFrame:
     """Per-document mean token log-probability under a unigram model
     (higher = more reference-like; threshold to filter).  Unknown terms
@@ -236,15 +227,15 @@ def with_unigram_logprob(
     `oov_logp` (maximally un-reference-like).
 
     The model side gets an explicit broadcast hint ONLY when its row count
-    is known (``model_rows``, i.e. UnigramLM.rows) and under
-    ``broadcast_max_rows``; otherwise the join is left to Catalyst/AQE,
-    which broadcasts small frames from runtime stats and falls back to a
-    shuffle join for web-scale vocabularies instead of OOMing."""
+    is known (``model_rows``, i.e. UnigramLM.rows) and fits
+    ``gate.BROADCAST_MAX_ROWS``.  An unknown-size model gets no hint and is
+    not counted (a count would re-run the fit): the join is left to
+    Catalyst/AQE, which broadcasts small frames from runtime stats and
+    falls back to a shuffle join for web-scale vocabularies instead of
+    OOMing, as a forced broadcast of an unbounded frame would."""
     toks = df.select(id_col, F.explode(_word_tokens(text_col)).alias("term"))
     model_side = (
-        F.broadcast(model)
-        if model_rows is not None and model_rows <= broadcast_max_rows
-        else model
+        model if model_rows is None else gate.broadcast_if_small(model, model_rows)
     )
     scored = toks.join(model_side, "term", "left").select(
         id_col, F.coalesce("logp", F.lit(oov_logp)).alias("logp")

@@ -17,8 +17,9 @@ Scale notes (100 TB):
     linear work, partial aggregation before each Exchange; no per-doc
     quadratic higher-order-function scans.
   * decontaminate: the benchmark side (eval sets) is tiny vs the corpus, so
-    its distinct n-grams broadcast; the corpus side never shuffles for the
-    match itself — only the hit-id set (<< corpus) reduces.
+    its distinct n-grams broadcast (size-gated, gate.py); the corpus side
+    never shuffles for the match itself — only the hit-id set (<< corpus)
+    reduces.
   * pack_sequences: one window per pack group.  Pack within bounded groups
     (source × shard), never a single global ORDER BY — a global pack order
     is a single-partition sort at corpus scale.
@@ -35,6 +36,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import gate
 from ..functions.hashing import md5_int, seeded_int, uniform
 
 if TYPE_CHECKING:
@@ -177,18 +179,6 @@ def _exploded_ngrams(df: DataFrame, n: int, text_col: str, *keep_cols: str) -> D
     )
 
 
-# Benchmark gram sets are small by nature (eval suites, not corpora), but
-# an adversarially large "benchmark" must not OOM executors through an
-# unconditional broadcast — same gate idiom as LM_BROADCAST_MAX_ROWS: one
-# bounded count action on the distinct gram set, shuffle join above the
-# limit with identical output (VERDICT r5 #3).
-BENCHGRAM_BROADCAST_MAX_ROWS = 2_000_000
-
-
-def _maybe_broadcast(small: DataFrame, max_rows: int) -> DataFrame:
-    return F.broadcast(small) if small.count() <= max_rows else small
-
-
 def contamination_report(
     corpus: DataFrame,
     benchmark: DataFrame,
@@ -199,12 +189,13 @@ def contamination_report(
     """Corpus documents sharing ≥1 word n-gram with any benchmark document
     (the standard train/test leakage check, e.g. GPT-3 appendix C /
     Gopher A2): returns (id, n_shared) with n_shared = distinct shared
-    n-grams.  The benchmark n-gram set is distinct + broadcast when within
-    BENCHGRAM_BROADCAST_MAX_ROWS (shuffle join otherwise) — the corpus is
-    matched map-side and only the hits aggregate."""
-    bench_grams = _maybe_broadcast(
-        _exploded_ngrams(benchmark, n, text_col).distinct(),
-        BENCHGRAM_BROADCAST_MAX_ROWS,
+    n-grams.  The benchmark n-gram set is distinct + broadcast when it fits
+    ``gate.BROADCAST_MAX_ROWS`` (one count job; shuffle join otherwise,
+    same output) — the corpus is matched map-side and only the hits
+    aggregate.  Benchmark gram sets are small by nature (eval suites, not
+    corpora), but an adversarially large one must not OOM executors."""
+    bench_grams = gate.broadcast_if_small(
+        _exploded_ngrams(benchmark, n, text_col).distinct()
     )
     corpus_grams = _exploded_ngrams(corpus, n, text_col, id_col)
     return (
@@ -228,14 +219,13 @@ def contamination_stats(
     PaLM/Llama decontamination thresholds on that fraction).
 
     One corpus-gram pass, one shuffle: the benchmark grams broadcast with a
-    hit mark (size-gated, shuffle join above the limit), and a single
-    per-doc aggregate counts distinct total and distinct shared grams
-    together (no second pass for the denominator)."""
-    bench_grams = _maybe_broadcast(
+    hit mark (gated as in contamination_report), and a single per-doc
+    aggregate counts distinct total and distinct shared grams together (no
+    second pass for the denominator)."""
+    bench_grams = gate.broadcast_if_small(
         _exploded_ngrams(benchmark, n, text_col)
         .distinct()
-        .withColumn("_hit", F.lit(1)),
-        BENCHGRAM_BROADCAST_MAX_ROWS,
+        .withColumn("_hit", F.lit(1))
     )
     corpus_grams = _exploded_ngrams(corpus, n, text_col, id_col)
     return (

@@ -858,6 +858,35 @@ def _exact_jaccard_udf(unit: str, n: int):
 # ---------------------------------------------------------------------------
 
 
+def _write_store(
+    sigs: DataFrame,
+    banded: DataFrame,
+    table_prefix: str,
+    n_buckets: int,
+    path: str | None,
+    suffix: str = "",
+    mode: str = "overwrite",
+) -> None:
+    """The store's one writer: `sigs` as the plain table
+    {prefix}_sigs, `banded` bucketed by (band, bucket) as {prefix}_banded,
+    external under `path` (as sigs{suffix} and banded{suffix}) when given."""
+    from ..sources.tables import write_bucketed
+
+    w = sigs.write.mode(mode).format("parquet")
+    if path:
+        w = w.option("path", f"{path}/sigs{suffix}")
+    w.saveAsTable(f"{table_prefix}_sigs")
+    write_bucketed(
+        banded,
+        f"{table_prefix}_banded",
+        ["band", "bucket"],
+        n_buckets,
+        sort_cols=["band", "bucket"],
+        path=(f"{path}/banded{suffix}" if path else None),
+        mode=mode,
+    )
+
+
 def write_neardup_store(
     sigs: DataFrame,
     table_prefix: str,
@@ -866,12 +895,11 @@ def write_neardup_store(
     n_buckets: int = 32,
     path: str | None = None,
     mode: str = "overwrite",
-    bucket_sigs: bool = False,
 ) -> None:
     """Persist a standing corpus's minhash signatures in the layout the
     daily-shard regime wants, as two catalog tables:
 
-      {prefix}_sigs    (doc_id, signature)        bucketed by doc_id
+      {prefix}_sigs    (doc_id, signature)        plain parquet
       {prefix}_banded  (doc_id, band, bucket)     bucketed by (band, bucket)
 
     The banded table is the standing corpus's LSH banding computed ONCE at
@@ -880,7 +908,8 @@ def write_neardup_store(
     stops carrying the O(standing) explode+hash re-banding, and the store
     side of the candidate join never shuffles (its scan's bucketing IS the
     join distribution).  The sigs table feeds the estimate filter, joined
-    on doc_id against the shard-sized candidate set.
+    on doc_id against the broadcast-small candidate sliver — a doc_id
+    bucketing would never be exploited there, so the table is plain.
 
     `bands`/`num_perm` must match the incremental call's parameters
     (banding is parameter-determined); `n_buckets` sizes a bucket at
@@ -892,38 +921,14 @@ def write_neardup_store(
     `tables.write_bucketed`, which clusters rows by bucket id first, so a
     write adds at most `n_buckets` banded files whatever the shard's
     partitioning.
-
-    The sigs table is plain by default (`bucket_sigs=False`): the only
-    consumer is the estimate filter, which joins it against the
-    broadcast-small candidate sliver — a doc_id bucketing would never be
-    exploited there, and per-shard bucketed appends pay a local sort +
-    per-bucket files for nothing.  Set `bucket_sigs=True` only if a
-    downstream co-located doc_id join will read the table.
     """
-    from ..sources.tables import write_bucketed
-
     assert num_perm % bands == 0
-    if bucket_sigs:
-        write_bucketed(
-            sigs,
-            f"{table_prefix}_sigs",
-            ["doc_id"],
-            n_buckets,
-            path=(f"{path}/sigs" if path else None),
-            mode=mode,
-        )
-    else:
-        w = sigs.write.mode(mode).format("parquet")
-        if path:
-            w = w.option("path", f"{path}/sigs")
-        w.saveAsTable(f"{table_prefix}_sigs")
-    write_bucketed(
+    _write_store(
+        sigs,
         band_buckets(sigs, bands, num_perm // bands),
-        f"{table_prefix}_banded",
-        ["band", "bucket"],
+        table_prefix,
         n_buckets,
-        sort_cols=["band", "bucket"],
-        path=(f"{path}/banded" if path else None),
+        path,
         mode=mode,
     )
 
@@ -934,13 +939,11 @@ def append_neardup_store(
     bands: int = 16,
     num_perm: int = 64,
     n_buckets: int = 32,
-    bucket_sigs: bool = False,
 ) -> None:
     """Append a processed shard's signatures (and their banding) to an
     existing neardup store — the amortized daily loop: dedup the shard
     against the store, then fold it in so the NEXT shard sees it as
-    standing.  Each document is shingled exactly once in its lifetime.
-    `bucket_sigs` must match the value the store was written with."""
+    standing.  Each document is shingled exactly once in its lifetime."""
     write_neardup_store(
         shard_sigs,
         table_prefix,
@@ -948,7 +951,6 @@ def append_neardup_store(
         num_perm=num_perm,
         n_buckets=n_buckets,
         mode="append",
-        bucket_sigs=bucket_sigs,
     )
 
 
@@ -970,7 +972,6 @@ def compact_neardup_store(
     bands: int = 16,
     num_perm: int = 64,
     n_buckets: int = 32,
-    bucket_sigs: bool = False,
 ) -> None:
     """Rewrite the store in place, collapsing append debris: each append
     adds up to n_buckets banded files and a sigs file per write task, so
@@ -1003,23 +1004,7 @@ def compact_neardup_store(
     )
     gen = uuid.uuid4().hex[:8]
     tmp = f"{table_prefix}_compact_{gen}"
-    from ..sources.tables import write_bucketed
-
-    if bucket_sigs:
-        write_bucketed(
-            sigs, f"{tmp}_sigs", ["doc_id"], n_buckets,
-            path=(f"{base}/sigs_{gen}" if base else None),
-        )
-    else:
-        w = sigs.write.format("parquet")
-        if base:
-            w = w.option("path", f"{base}/sigs_{gen}")
-        w.saveAsTable(f"{tmp}_sigs")
-    write_bucketed(
-        banded, f"{tmp}_banded", ["band", "bucket"], n_buckets,
-        sort_cols=["band", "bucket"],
-        path=(f"{base}/banded_{gen}" if base else None),
-    )
+    _write_store(sigs, banded, tmp, n_buckets, base, suffix=f"_{gen}")
     for suffix in ("sigs", "banded"):
         spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_{suffix}")
         spark.sql(

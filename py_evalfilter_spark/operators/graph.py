@@ -27,25 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import gate
 from ..functions.hashing import seeded_int
-
-
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Best-effort unpersist of a localCheckpoint()'s backing RDD blocks.
-
-    localCheckpoint persists its RDD OUTSIDE the SQL CacheManager, so
-    neither `df.unpersist()` nor `spark.catalog.clearCache()` can release
-    it; the blocks otherwise live until the JVM object is GC'd
-    (ContextCleaner).  Without an explicit release the iterative loop
-    below holds O(rounds) cached label-frame copies at once — at corpus
-    scale that is real executor storage, not hygiene.  The df must not be
-    used after release (the checkpoint blocks are its only lineage).
-    Blocking so callers (and the PinScope storage tests) observe the
-    blocks gone synchronously."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(True)
-    except Exception:
-        pass  # private API moved — fall back to ContextCleaner GC
+from ..pinning import release_local_checkpoint
 
 
 def connected_components(
@@ -53,7 +37,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 20,
-    driver_threshold: int = 200_000,
 ) -> DataFrame:
     """(node, comp) for every node appearing in `edges`; comp = min node id
     of the node's connected component.  Converges early when a round
@@ -61,15 +44,14 @@ def connected_components(
 
     Hybrid strategy: the dup-pair graph is normally orders of magnitude
     smaller than the corpus, and the distributed loop's cost is dominated
-    by per-round job latency, not data.  At or below ``driver_threshold``
-    UNDIRECTED edges the components are solved with a path-compressed
-    union-find on the driver — one collect of one Row per undirected edge;
-    pyspark Rows cost ~100-300 bytes each on the driver heap, so the
-    default 200k edges is roughly 20-60 MB plus the parent dict (size the
-    threshold to the job's driver memory, not to 'edges are small').
-    Above the threshold the O(log diameter) distributed loop runs.  Both
-    paths are exact; the pytest union-find cross-check pins them against
-    each other."""
+    by per-round job latency, not data.  When the directed edge rows fit
+    ``gate.DRIVER_MAX_ROWS`` (400k rows, i.e. 200k undirected edges) the
+    components are solved with a path-compressed union-find on the driver —
+    one collect of one Row per undirected edge; pyspark Rows cost ~100-300
+    bytes each on the driver heap, so 200k edges is roughly 20-60 MB plus
+    the parent dict.  Above the limit the O(log diameter) distributed loop
+    runs.  Both paths are exact; the pytest union-find cross-check pins
+    them against each other at the default limit and at 0."""
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
         F.col("a") != F.col("b")
     )
@@ -90,7 +72,7 @@ def connected_components(
         .select("_e.a", "_e.b")
         .distinct()
     )
-    # LAZY checkpoint, materialized by the count() below — a real SQL
+    # LAZY checkpoint, materialized by the gate's count() below — a real SQL
     # action.  An EAGER localCheckpoint materializes through an RDD-level
     # job, which completes any upstream observe() node with an EMPTY
     # metrics row and permanently poisons the caller's Observation (hit by
@@ -98,8 +80,8 @@ def connected_components(
     # over an observed frame).
     und = und.localCheckpoint(eager=False)  # reused every round: fix the lineage once
 
-    # und holds both directions: und.count() is 2x the undirected edges
-    if und.count() <= 2 * driver_threshold:
+    # und holds both directions: 2 rows per undirected edge
+    if gate.fits(und, gate.DRIVER_MAX_ROWS):
         parent: dict = {}
 
         def find(x):
@@ -120,7 +102,7 @@ def connected_components(
         schema = und.select(
             F.col("a").alias("node"), F.col("a").alias("comp")
         ).schema
-        _release_local_checkpoint(und)  # done with the edge frame
+        release_local_checkpoint(und)  # done with the edge frame
         return edges.sparkSession.createDataFrame(rows, schema)
 
     labels = (
@@ -168,11 +150,11 @@ def connected_components(
             .limit(1)
             .count()
         )
-        _release_local_checkpoint(labels)  # superseded round's blocks
+        release_local_checkpoint(labels)  # superseded round's blocks
         labels = doubled
         if changed == 0:
             break
-    _release_local_checkpoint(und)
+    release_local_checkpoint(und)
     return labels
 
 

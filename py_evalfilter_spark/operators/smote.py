@@ -9,10 +9,12 @@ Spark-first re-expression, fully deterministic and JVM-side:
 
 * exact within-class kNN by squared Euclidean distance — broadcast
   self-join of the minority class.  The minority class is small by the
-  very premise of oversampling, so the broadcast is the right default; a
-  minority class too large to broadcast plugs an LSH candidate frame in
-  via `neighbors=` (similarity.lsh_topk produces the right shape) and the
-  rest of the plan is unchanged — no all-pairs work outside the class.
+  very premise of oversampling, so the broadcast is the right default; it
+  is size-gated by one count of the class (`gate.BROADCAST_MAX_ROWS`).  A
+  minority class too large to broadcast is too large for exact all-pairs
+  kNN too: plug an LSH candidate frame in via `neighbors=`
+  (similarity.lsh_topk produces the right shape) and the rest of the plan
+  is unchanged — no all-pairs work outside the class.
 * the reference's RandomState is replaced by portable integer hash
   streams (plain BIGINT arithmetic, identical in ANSI SQL, so the
   operator carries a full DuckDB oracle — unlike executor-side RNG,
@@ -35,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import gate
+
 _M = 2147483647  # 2^31 - 1: the hash-stream modulus
 _B = 1000003  # id pre-fold keeps every product inside 63 bits
 
@@ -50,8 +54,12 @@ def knn_within_class(
     `m` must carry (id_col, vec_col: array<double>).  Broadcast self-join +
     squared-Euclidean rank; distances are rounded (1e-6) before ranking
     with an id tie-break so rank order is reproducible across engines.
+    The three broadcast hints on `m` apply only when it fits
+    ``gate.BROADCAST_MAX_ROWS`` (one count job); above it the joins are
+    left to Catalyst/AQE, with the same rows.
     Returns (base_id, base_vec, nbr_id, nbr_vec, nbr_rank).
     """
+    hint = F.broadcast if gate.fits(m, gate.BROADCAST_MAX_ROWS) else (lambda d: d)
     right = m.select(
         F.col(id_col).alias("nbr_id"), F.col(vec_col).alias("nbr_vec")
     )
@@ -76,7 +84,7 @@ def knn_within_class(
     p = max(m.sparkSession.sparkContext.defaultParallelism, 1)
     pairs = (
         m.repartition(p, id_col)
-        .join(F.broadcast(right), F.col(id_col) != F.col("nbr_id"))
+        .join(hint(right), F.col(id_col) != F.col("nbr_id"))
         .withColumn("dist2", F.round(dist2, 6))
         .select(id_col, "nbr_id", "dist2")
     )
@@ -86,9 +94,9 @@ def knn_within_class(
         .filter(F.col("nbr_rank") <= k)
         .drop("dist2")
     )
-    return ranked.join(F.broadcast(m), id_col).join(
-        F.broadcast(right), "nbr_id"
-    ).select(id_col, vec_col, "nbr_id", "nbr_vec", "nbr_rank")
+    return ranked.join(hint(m), id_col).join(hint(right), "nbr_id").select(
+        id_col, vec_col, "nbr_id", "nbr_vec", "nbr_rank"
+    )
 
 
 def _hash_stream(mult: int, addend: int, offset: Column) -> Column:

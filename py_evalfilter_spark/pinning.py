@@ -27,23 +27,33 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
+def release_local_checkpoint(df: DataFrame, blocking: bool = True) -> None:
+    """Best-effort unpersist of a localCheckpoint()'s backing RDD blocks.
+
+    localCheckpoint persists its RDD OUTSIDE the SQL CacheManager, so
+    neither `df.unpersist()` nor `spark.catalog.clearCache()` can release
+    it; the blocks otherwise live until the JVM object is GC'd
+    (ContextCleaner).  An iterative loop that checkpoints every round
+    (operators/graph.py) would hold O(rounds) copies at once.  The call is
+    private API: if it moved, the ContextCleaner GC reclaims the blocks
+    later.  The df must not be used after release (the checkpoint blocks
+    are its only lineage).  Blocking by default, so callers (and the
+    PinScope storage tests) observe the blocks gone synchronously."""
+    try:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(bool(blocking))
+    except Exception:
+        pass
+
+
 class _LocalCheckpointHandle:
     """Adapts a localCheckpoint'ed frame to the scope's release protocol:
-    `.unpersist(blocking)` frees the checkpoint's RDD blocks (private-API
-    best-effort — on failure the ContextCleaner GC reclaims them later).
-    The frame must not be used after release: the blocks are its only
-    lineage."""
+    `.unpersist(blocking)` is :func:`release_local_checkpoint`."""
 
     def __init__(self, df: DataFrame) -> None:
         self._df = df
 
     def unpersist(self, blocking: bool = False) -> None:
-        try:
-            self._df._jdf.queryExecution().analyzed().rdd().unpersist(
-                bool(blocking)
-            )
-        except Exception:
-            pass
+        release_local_checkpoint(self._df, blocking)
 
 
 class PinScope:
@@ -68,7 +78,7 @@ class PinScope:
         the cache is evicted under pressure), a checkpoint removes it.
         The blocks live OUTSIDE the SQL CacheManager, so plain unpersist /
         clearCache can't free them — the scope's release reaches the RDD
-        directly (same mechanism as operators/graph.py's loop)."""
+        directly (:func:`release_local_checkpoint`)."""
         out = df.localCheckpoint(eager=eager)
         self._frames.append(_LocalCheckpointHandle(out))
         return out

@@ -265,10 +265,11 @@ def incremental_neardup_sink(
             old_texts = spark.read.parquet(f"{store_dir}/texts").filter(
                 f"batch < {batch_id}"
             ).drop("batch")
-            has_old = old_sigs.limit(1).count() > 0
-        except AnalysisException:
-            has_old = False
-        if has_old:
+        except AnalysisException:  # no store yet: the first batch
+            old_sigs = None
+        if old_sigs is not None:
+            # an empty `batch < N` store is just an empty old side: the
+            # incremental pairs are then the full operator's, with no probe job
             pairs = dedup.minhash_lsh_pairs_incremental(
                 new, old_texts, id_col, text_col,
                 est_margin=est_margin, old_sigs=old_sigs, **kw,

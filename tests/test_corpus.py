@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from py_evalfilter_spark import gate
 from py_evalfilter_spark.operators import corpus as corpus_ops
 
 
@@ -379,7 +380,7 @@ class TestDecontamination:
             (r["doc_id"], r["n_shared"], r["n_grams"], r["contaminated_frac"])
             for r in corpus_ops.contamination_stats(corpus, bench, n=2).collect()
         )
-        monkeypatch.setattr(corpus_ops, "BENCHGRAM_BROADCAST_MAX_ROWS", 0)
+        monkeypatch.setattr(gate, "BROADCAST_MAX_ROWS", 0)
         rep = corpus_ops.contamination_report(corpus, bench, n=2)
         stats = corpus_ops.contamination_stats(corpus, bench, n=2)
         for df in (rep, stats):
@@ -875,10 +876,12 @@ class TestUnigramLM:
         for g, w in zip(got.avg_logprob, want.avg_logprob):
             assert abs(g - w) < 1e-9
 
-    def test_broadcast_gated_on_known_model_rows(self, spark):
+    def test_broadcast_gated_on_known_model_rows(self, spark, monkeypatch):
         # Known-small model -> explicit broadcast hint in the plan; a model
         # of UNKNOWN or too-large row count must NOT carry the hint (the
         # web-scale vocabulary would OOM executors; Catalyst/AQE decides).
+        # The limit is read when the call runs: at 0 a known-small model
+        # is too large as well.
         from py_evalfilter_spark.functions import textanalysis
 
         ref = spark.createDataFrame(
@@ -892,7 +895,9 @@ class TestUnigramLM:
         )
         assert "ResolvedHint" in str(hinted._jdf.queryExecution().analyzed())
 
-        for kwargs in ({}, {"model_rows": 10**9}):
+        for kwargs in ({}, {"model_rows": 10**9}, {"model_rows": lm.rows, "limit": 0}):
+            if "limit" in kwargs:
+                monkeypatch.setattr(gate, "BROADCAST_MAX_ROWS", kwargs.pop("limit"))
             unhinted = textanalysis.with_unigram_logprob(
                 docs, lm.model, lm.oov_logp, **kwargs
             )

@@ -14,6 +14,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+from py_evalfilter_spark import gate
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
@@ -56,6 +57,10 @@ QUERY_NAMES = sorted(entrymod.oracle_sql().keys())
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_query_matches_oracle(spark, duck, name):
+    _assert_matches_oracle(spark, duck, name)
+
+
+def _assert_matches_oracle(spark, duck, name):
     q = entrymod.queries()[name]
     spark_pdf = q(spark, SF_DIR).toPandas()
     duck_pdf = duck.execute(entrymod.oracle_sql()[name]).fetchdf()
@@ -69,6 +74,52 @@ def test_query_matches_oracle(spark, duck, name):
         else:
             ok = bool(((av == bv) | (av.isna() & bv.isna())).all())
         assert ok, f"{name}: column {c} mismatch\nspark:\n{av.head()}\nduck:\n{bv.head()}"
+
+
+# Oracle queries whose construction calls the size gate (gate.fits), as
+# test_gated_queries_found_by_spy finds them.  Each reruns its oracle with
+# both limits at 0, so the large-data side of every gate is checked too.
+GATED = [
+    "cluster_split", "contamination_stats", "decontaminate", "dedup_best",
+    "dedup_cluster", "lm_score", "perplexity_buckets", "smote",
+]
+
+
+def test_gated_queries_found_by_spy(spark, monkeypatch):
+    class _Gated(Exception):
+        pass
+
+    def spy(*args, **kwargs):
+        raise _Gated  # stop construction at the first gate: no count job
+
+    monkeypatch.setattr(gate, "fits", spy)
+    found = set()
+    try:
+        for name in QUERY_NAMES:
+            try:
+                entrymod.queries()[name](spark, SF_DIR)
+            except _Gated:
+                found.add(name)
+    finally:
+        spark.catalog.clearCache()  # persists registered by cut-off builds
+    assert {"decontaminate", "dedup_cluster", "smote", "lm_score"} <= found
+    assert found == set(GATED)
+
+
+@pytest.mark.parametrize("name", GATED)
+def test_large_regime_matches_oracle(spark, duck, monkeypatch, name):
+    monkeypatch.setattr(gate, "BROADCAST_MAX_ROWS", 0)
+    monkeypatch.setattr(gate, "DRIVER_MAX_ROWS", 0)
+    decided = []
+    real_fits = gate.fits
+
+    def recording(*args, **kwargs):
+        decided.append(real_fits(*args, **kwargs))
+        return decided[-1]
+
+    monkeypatch.setattr(gate, "fits", recording)
+    _assert_matches_oracle(spark, duck, name)
+    assert False in decided, f"{name}: no gate took its large side"
 
 
 def test_rows_only_queries_run(spark):

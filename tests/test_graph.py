@@ -8,14 +8,15 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from py_evalfilter_spark import gate
 from py_evalfilter_spark.operators import graph
 
 
-def _cc(spark, edges, **kw):
+def _cc(spark, edges):
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     return {
         r["node"]: r["comp"]
-        for r in graph.connected_components(df, **kw).collect()
+        for r in graph.connected_components(df, ).collect()
     }
 
 
@@ -38,33 +39,41 @@ def _uf(edges):
 
 import pytest
 
-# driver_threshold=0 forces the DISTRIBUTED doubling loop; the default
-# takes the driver union-find path — every topology must agree on both
+
+@pytest.fixture
+def regime(request, monkeypatch):
+    """A DRIVER_MAX_ROWS of 0 forces the DISTRIBUTED doubling loop; the
+    default takes the driver union-find path."""
+    if request.param == "distributed":
+        monkeypatch.setattr(gate, "DRIVER_MAX_ROWS", 0)
+
+
+# every topology must agree on both paths
 BOTH_PATHS = pytest.mark.parametrize(
-    "kw", [{}, {"driver_threshold": 0}], ids=["driver", "distributed"]
+    "regime", ["driver", "distributed"], indirect=True
 )
 
 
 class TestConnectedComponents:
     @BOTH_PATHS
-    def test_two_chains_and_star(self, spark, kw):
+    def test_two_chains_and_star(self, spark, regime):
         edges = [(0, 1), (1, 2), (2, 3)] + [(10, 11), (10, 12), (10, 13)]
-        got = _cc(spark, edges, **kw)
+        got = _cc(spark, edges)
         assert got == {0: 0, 1: 0, 2: 0, 3: 0, 10: 10, 11: 10, 12: 10, 13: 10}
 
     @BOTH_PATHS
-    def test_cycle_and_self_loop(self, spark, kw):
-        got = _cc(spark, [(5, 6), (6, 7), (7, 5), (9, 9)], **kw)
+    def test_cycle_and_self_loop(self, spark, regime):
+        got = _cc(spark, [(5, 6), (6, 7), (7, 5), (9, 9)], )
         assert got == {5: 5, 6: 5, 7: 5}  # self-loop-only node drops out
 
     @BOTH_PATHS
-    def test_min_id_in_middle_of_chain(self, spark, kw):
+    def test_min_id_in_middle_of_chain(self, spark, regime):
         # min label must propagate BOTH directions from the middle
-        got = _cc(spark, [(50, 3), (3, 70), (70, 80)], **kw)
+        got = _cc(spark, [(50, 3), (3, 70), (70, 80)], )
         assert got == {50: 3, 3: 3, 70: 3, 80: 3}
 
     @BOTH_PATHS
-    def test_matches_union_find_on_random_graphs(self, spark, kw):
+    def test_matches_union_find_on_random_graphs(self, spark, regime):
         rng = random.Random(1234)
         for trial in range(3):
             nodes = list(range(trial * 1000, trial * 1000 + 60))
@@ -72,14 +81,15 @@ class TestConnectedComponents:
                 (rng.choice(nodes), rng.choice(nodes)) for _ in range(40)
             ]
             edges = [e for e in edges if e[0] != e[1]]
-            assert _cc(spark, edges, **kw) == _uf(edges), f"trial {trial}"
+            assert _cc(spark, edges) == _uf(edges), f"trial {trial}"
 
-    def test_long_chain_converges_via_doubling(self, spark):
+    def test_long_chain_converges_via_doubling(self, spark, monkeypatch):
         # a 300-node path has diameter 299; pointer doubling must close it
         # within the default max_iter=20 (~log2 rounds), where plain
         # min-propagation would need ~299 rounds — forced distributed
+        monkeypatch.setattr(gate, "DRIVER_MAX_ROWS", 0)
         edges = [(i, i + 1) for i in range(300)]
-        got = _cc(spark, edges, driver_threshold=0)
+        got = _cc(spark, edges)
         assert set(got.values()) == {0} and len(got) == 301
 
 

@@ -54,6 +54,29 @@ class TestJoinStrategies:
         assert "BroadcastHashJoin" in plan
 
 
+class TestSmoteGate:
+    """knn_within_class hints its three minority-class joins only when the
+    class fits gate.BROADCAST_MAX_ROWS; above it Catalyst/AQE choose."""
+
+    @staticmethod
+    def _analyzed(df) -> str:
+        return df._jdf.queryExecution().analyzed().toString()
+
+    @staticmethod
+    def _rows(df) -> list:
+        return sorted(tuple(r) for r in df.collect())
+
+    def test_small_class_hinted_large_unhinted_same_rows(self, spark, monkeypatch):
+        from py_evalfilter_spark import gate
+
+        small = dq.q_smote(spark, SF)
+        assert self._analyzed(small).count("ResolvedHint") == 3
+        monkeypatch.setattr(gate, "BROADCAST_MAX_ROWS", 0)
+        large = dq.q_smote(spark, SF)
+        assert "ResolvedHint" not in self._analyzed(large)
+        assert self._rows(large) == self._rows(small)
+
+
 class TestWindowChain:
     def test_single_exchange_for_all_window_features(self, spark):
         t = dq.transcripts_df(spark, SF)
