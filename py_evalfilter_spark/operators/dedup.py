@@ -857,6 +857,8 @@ def _exact_jaccard_udf(unit: str, n: int):
 # Persisted near-dup signature store (the standing-corpus layout)
 # ---------------------------------------------------------------------------
 
+NEARDUP_BUCKETS = 32  # the store's default bucket count
+
 
 def _write_store(
     sigs: DataFrame,
@@ -892,7 +894,7 @@ def write_neardup_store(
     table_prefix: str,
     bands: int = 16,
     num_perm: int = 64,
-    n_buckets: int = 32,
+    n_buckets: int = NEARDUP_BUCKETS,
     path: str | None = None,
     mode: str = "overwrite",
 ) -> None:
@@ -938,7 +940,7 @@ def append_neardup_store(
     table_prefix: str,
     bands: int = 16,
     num_perm: int = 64,
-    n_buckets: int = 32,
+    n_buckets: int = NEARDUP_BUCKETS,
 ) -> None:
     """Append a processed shard's signatures (and their banding) to an
     existing neardup store — the amortized daily loop: dedup the shard
@@ -967,11 +969,7 @@ def read_neardup_store(
 
 
 def compact_neardup_store(
-    spark,
-    table_prefix: str,
-    bands: int = 16,
-    num_perm: int = 64,
-    n_buckets: int = 32,
+    spark, table_prefix: str, n_buckets: int = NEARDUP_BUCKETS
 ) -> None:
     """Rewrite the store in place, collapsing append debris: each append
     adds up to n_buckets banded files and a sigs file per write task, so

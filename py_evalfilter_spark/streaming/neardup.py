@@ -30,42 +30,43 @@ should ALSO pass `timeout` (processing-time idle eviction) so the
 bucket-count dimension is bounded too; it is opt-in rather than default
 because a ProcessingTimeTimeout keeps a Trigger.AvailableNow query alive
 waiting on timers — a bounded replay/backfill would hang (measured: the
-batch-parity pytest blocks >170 s with any finite default)."""
+batch-parity pytest blocks >170 s with any finite default).
+
+The DELTA-regime sink, `incremental_neardup_sink`, carries no stream
+state and no layout of its own: each micro-batch is looked up against,
+then appended to, the one bucketed neardup store of operators/dedup
+({prefix}_sigs and {prefix}_banded, plus a plain {prefix}_texts table as
+the verify source).  The sink's own pairs/batch=N/_PAIRS_COMMITTED
+marker marks a replay, which appends only the batch rows each table
+lacks.  A restart needs a catalog that persists across applications."""
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..operators import dedup
+from ..pinning import PinScope
 
 NEARDUP_OUT = "doc_id long, dup_id long, est double"
 NEARDUP_STATE = "buckets array<long>, ids array<long>, sigs array<array<long>>"
 
-_DURATION_MS = {
-    "ms": 1,
-    "millisecond": 1,
-    "milliseconds": 1,
-    "second": 1000,
-    "seconds": 1000,
-    "minute": 60_000,
-    "minutes": 60_000,
-    "hour": 3_600_000,
-    "hours": 3_600_000,
-    "day": 86_400_000,
-    "days": 86_400_000,
-}
-
 
 def _duration_to_ms(timeout: str | int) -> int:
     """'30 minutes' → 1_800_000 (GroupState.setTimeoutDuration takes int
-    milliseconds in this PySpark version, not a CalendarInterval string)."""
+    milliseconds in this PySpark version, not a CalendarInterval string).
+    Strings go through pandas' Timedelta parser; a bare number (pandas
+    would read nanoseconds) or a non-positive duration is rejected."""
     if isinstance(timeout, int):
         return timeout
-    n, _, unit = timeout.strip().partition(" ")
     try:
-        return int(n) * _DURATION_MS[unit.strip().lower()]
-    except (ValueError, KeyError):
-        raise ValueError(f"unparseable timeout duration: {timeout!r}") from None
+        ms = pd.Timedelta(timeout) // pd.Timedelta(1, "ms")
+    except ValueError:
+        ms = 0
+    if ms <= 0:
+        raise ValueError(f"unparseable timeout duration: {timeout!r}")
+    return ms
 
 
 def streaming_minhash_candidates(
@@ -108,7 +109,6 @@ def streaming_minhash_candidates(
     bulk backfill batch touches (and round-trips) most groups' state.
     None restores one-group-per-bucket (the minimal-state-churn shape for
     low-rate incremental streams)."""
-    import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
@@ -128,8 +128,6 @@ def streaming_minhash_candidates(
     )
     banded = dedup.band_buckets(sigs, bands, r, keep_signature=True)
     if group_coalesce is not None:
-        from pyspark.sql import functions as F
-
         banded = banded.withColumn(
             "gkey", F.pmod(F.col("bucket"), F.lit(int(group_coalesce)))
         )
@@ -211,7 +209,8 @@ def streaming_minhash_candidates(
 
 
 def incremental_neardup_sink(
-    store_dir: str,
+    table_prefix: str,
+    path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
@@ -225,67 +224,106 @@ def incremental_neardup_sink(
     """foreachBatch sink for streaming near-dup in the DELTA regime — the
     design the round-6 measurement prescribed (BENCH/BASELINE.md):
     signatures live in a TABLE, not in stream state.  Each micro-batch
-    (an arriving shard) is deduped against the persisted standing
-    signature store via the asymmetric banded join of
-    operators/dedup.minhash_lsh_pairs_incremental (old×old candidate mass
-    never built, exact-verified output), then appends its own signatures
-    and texts to the store.  Contrast streaming_minhash_candidates, which
-    measured 55–119 s per 10k-doc delta at 1M standing docs (HDFS state
-    store rewrote ~6.3 GB per batch) vs ~17 s for this shape — and which
+    (an arriving shard) is deduped against the standing neardup store of
+    operators/dedup (the bucketed layout `shard_ingest` maintains), then
+    folded into it.  Contrast streaming_minhash_candidates, which measured
+    55–119 s per 10k-doc delta at 1M standing docs (HDFS state store
+    rewrote ~6.3 GB per batch) vs ~17 s for this shape — and which
     remains the right tool only where candidates must be emitted
     continuously from standing state.
 
-    Layout under `store_dir` (all parquet, partition-discovered):
-      signatures/batch=N/   per-shard minhash signatures
-      texts/batch=N/        per-shard raw texts (verify-stage source)
-      pairs/batch=N/        exact-verified pairs whose later member
-                            arrived in batch N
+    Tables (catalog, external under `path`):
+      {prefix}_sigs, {prefix}_banded   dedup.write_neardup_store's store
+      {prefix}_texts                   (doc_id, text), the verify source
+    and `path`/pairs/batch=N/: exact-verified pairs whose later member
+    arrived in batch N.  The first batch creates an empty store (an empty
+    store is just an empty old side), with write_neardup_store's default
+    `n_buckets`: a pre-built store with another bucket count fails loudly
+    on the first append (and one without a `{prefix}_texts` table at the
+    first lookup).  `dedup.compact_neardup_store` compacts the
+    sigs/banded tables between batches; `{prefix}_texts` is not compacted.
 
-    Replay-idempotent: every write targets its own batch=N directory with
-    mode=overwrite, and reads filter `batch < N`, so a re-delivered batch
-    (foreachBatch's at-least-once contract) overwrites its previous
-    attempt and never sees its own partial output as standing state.
+    Per batch: the signatures are computed once (one MinHash Arrow pass);
+    the lookup joins the shard's banding against the stored bucketed
+    banding (the store side never shuffles), writes the pairs, then
+    appends the shard to the texts, sigs and banded tables.
+
+    Replay-idempotent (foreachBatch is at-least-once): the pairs are
+    written first, then the sink's own marker pairs/batch=N/_PAIRS_COMMITTED
+    (it does not rely on Hadoop's _SUCCESS, which a conf can switch off),
+    then the appends.  A marked batch is a replay: it skips the lookup
+    (its pairs stand) and appends to each table only the batch rows that
+    table lacks, so a batch whose first attempt died between appends ends
+    as if delivered once.
+
+    Restarts: the tables are found through the session catalog, so a
+    restarted query needs a catalog that persists across applications
+    (a Hive metastore or equivalent; `session.get_spark` builds an
+    in-memory one).  In a fresh catalog the sink does not re-create the
+    store over its files: the first batch's `errorifexists` create meets
+    the non-empty `path`/texts and fails loudly.  Re-register the tables
+    (after a compaction the store lives in sigs_<gen>/banded_<gen>) or
+    start over with an empty `path`.
 
     Usage:
         q = (stream.writeStream.foreachBatch(
-                incremental_neardup_sink("/data/neardup_store"))
+                incremental_neardup_sink("neardup", "/data/neardup_store"))
              .option("checkpointLocation", ckpt).start())
     """
-    from pyspark.errors.exceptions.captured import AnalysisException
+    texts = f"{table_prefix}_texts"
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        new = batch_df.select(id_col, text_col)
-        kw = dict(n=n, num_perm=num_perm, bands=bands, threshold=threshold,
-                  seed=seed, unit=unit)
-        try:
-            old_sigs = spark.read.parquet(f"{store_dir}/signatures").filter(
-                f"batch < {batch_id}"
-            ).drop("batch")
-            old_texts = spark.read.parquet(f"{store_dir}/texts").filter(
-                f"batch < {batch_id}"
-            ).drop("batch")
-        except AnalysisException:  # no store yet: the first batch
-            old_sigs = None
-        if old_sigs is not None:
-            # an empty `batch < N` store is just an empty old side: the
-            # incremental pairs are then the full operator's, with no probe job
-            pairs = dedup.minhash_lsh_pairs_incremental(
-                new, old_texts, id_col, text_col,
-                est_margin=est_margin, old_sigs=old_sigs, **kw,
+        new = batch_df.selectExpr(f"`{id_col}` AS doc_id", f"`{text_col}` AS text")
+        out = f"{path}/pairs/batch={batch_id}"
+        # the sink's own replay marker, written once the pairs are committed
+        mark = spark._jvm.org.apache.hadoop.fs.Path(f"{out}/_PAIRS_COMMITTED")
+        fs = mark.getFileSystem(spark._jsc.hadoopConfiguration())
+        with PinScope() as pins:
+            sigs = pins.pin(  # the batch's one MinHash pass feeds lookup and appends
+                dedup.minhash_signatures(new, "doc_id", "text", n, num_perm, seed, unit)
             )
-        else:
-            pairs = dedup.minhash_lsh_pairs(new, id_col, text_col, **kw)
-        pairs.write.mode("overwrite").parquet(
-            f"{store_dir}/pairs/batch={batch_id}"
-        )
-        dedup.minhash_signatures(
-            new, id_col, text_col, n, num_perm, seed, unit=unit
-        ).write.mode("overwrite").parquet(
-            f"{store_dir}/signatures/batch={batch_id}"
-        )
-        new.write.mode("overwrite").parquet(
-            f"{store_dir}/texts/batch={batch_id}"
-        )
+            # errorifexists: a table missing from the catalog over a
+            # non-empty location is a restart in a fresh catalog, and
+            # creating it any other way would clear or orphan the store
+            if not spark.catalog.tableExists(f"{table_prefix}_banded"):
+                new.limit(0).write.saveAsTable(
+                    texts, "parquet", "errorifexists", path=f"{path}/texts"
+                )
+                dedup.write_neardup_store(
+                    sigs.limit(0), table_prefix, path=path, mode="errorifexists"
+                )
+            if fs.exists(mark):
+                _append_lacking(spark, table_prefix, new, sigs, bands, num_perm)
+                return
+            verify_texts = new.union(spark.table(texts)).toDF("doc_id", "__text")
+            dedup._lsh_pairs(
+                sigs, *dedup.read_neardup_store(spark, table_prefix), verify_texts,
+                n, num_perm, bands, threshold, unit, est_margin, pins,
+            ).write.mode("overwrite").parquet(out)
+            fs.create(mark).close()  # appends may start only after this
+            new.write.saveAsTable(texts, "parquet", "append")
+            dedup.append_neardup_store(sigs, table_prefix, bands, num_perm)
 
     return _sink
+
+
+def _append_lacking(spark, table_prefix, new, sigs, bands, num_perm) -> None:
+    """A replay's appends: each table gets only the batch rows it does
+    not hold yet (its doc_ids left-semi joined against the broadcast batch
+    ids, then the batch left-anti joined against that), so a batch whose
+    first attempt died between appends ends as if delivered once."""
+    ids = F.broadcast(sigs.select("doc_id"))
+
+    def lacking(df: DataFrame, table: str) -> DataFrame:
+        have = spark.table(f"{table_prefix}_{table}")
+        have = have.join(ids, "doc_id", "left_semi").select("doc_id")
+        return df.join(have, "doc_id", "left_anti")
+
+    texts = lacking(new, "texts")
+    texts.write.saveAsTable(f"{table_prefix}_texts", "parquet", "append")
+    banded = dedup.band_buckets(lacking(sigs, "banded"), bands, num_perm // bands)
+    dedup._write_store(
+        lacking(sigs, "sigs"), banded, table_prefix, dedup.NEARDUP_BUCKETS, None,
+        mode="append",
+    )

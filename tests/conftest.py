@@ -39,3 +39,16 @@ def relation_root_paths(relation) -> list[str]:
     slash — matched by value, not in a plan string that Spark truncates."""
     paths = relation.location().rootPaths()
     return [paths.apply(i).toUri().getPath().rstrip("/") for i in range(paths.size())]
+
+
+@pytest.fixture
+def sink_store(spark, tmp_path):
+    """(table prefix, directory) for one incremental_neardup_sink test: a
+    unique prefix, since the Spark session (and its catalog) is shared,
+    and the sink's three tables are dropped afterwards."""
+    import uuid
+
+    prefix = f"sink_{uuid.uuid4().hex[:8]}"
+    yield prefix, str(tmp_path / "sink_store")
+    for table in ("texts", "sigs", "banded"):
+        spark.sql(f"DROP TABLE IF EXISTS {prefix}_{table}")

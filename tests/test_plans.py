@@ -490,6 +490,55 @@ class TestNeardupStorePlan:
             spark.sql(f"DROP TABLE IF EXISTS {prefix}_sigs")
             spark.sql(f"DROP TABLE IF EXISTS {prefix}_banded")
 
+    def test_sink_one_minhash_pass_and_store_side_unshuffled(
+        self, spark, sink_store, monkeypatch
+    ):
+        """streaming/neardup.incremental_neardup_sink over the one store: a
+        micro-batch's rows enter the MinHash Arrow pass once (the pinned
+        signatures feed both the lookup and the appends), and the lookup
+        reads the {prefix}_banded scan into its candidate join with NO
+        Exchange in between."""
+        from py_evalfilter_spark.operators import dedup
+        from py_evalfilter_spark.streaming import neardup
+
+        prefix, store = sink_store
+        docs = dq._read(spark, SF, "documents").select("doc_id", "text")
+        b0 = docs.limit(200).localCheckpoint()
+        b1 = b0.limit(40).select(
+            (F.col("doc_id") + 10_000_000).alias("doc_id"), "text"
+        ).localCheckpoint()
+        minhash, lsh_pairs = dedup.minhash_signatures, dedup._lsh_pairs
+        entered, plans = spark.sparkContext.accumulator(0), []
+
+        def counted(df, *args, **kwargs):
+            def count(batches):
+                for pdf in batches:
+                    entered.add(len(pdf))
+                    yield pdf
+
+            return minhash(df.mapInPandas(count, df.schema), *args, **kwargs)
+
+        def planned(*args):
+            out = lsh_pairs(*args)
+            plans.append(_plan(out))
+            return out
+
+        monkeypatch.setattr(dedup, "minhash_signatures", counted)
+        monkeypatch.setattr(dedup, "_lsh_pairs", planned)
+        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            sink = neardup.incremental_neardup_sink(prefix, store, unit="word")
+            sink(b0, 0)
+            assert entered.value == 200
+            sink(b1, 1)
+            assert entered.value == 240
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        store_path = _path_to_sort_merge_join(plans[-1], f"{prefix}_banded[")
+        assert store_path, plans[-1]
+        assert not any("Exchange" in node for node in store_path), store_path
+
     def test_verify_join_scans_corpus_texts_once(self, spark, tmp_path):
         """The verify join reads (doc_id, text) for both sides of a pair
         from ONE texts plan: after an action, the executed incremental plan

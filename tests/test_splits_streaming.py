@@ -1,5 +1,7 @@
 """Split operators + streaming sessionization parity with the batch engine."""
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -298,7 +300,69 @@ class TestStatefulConvState:
         assert (multi >= 2).any(), "no conversation spanned two micro-batches"
 
 
+_SINK_DOCS = pd.DataFrame({
+    "doc_id": list(range(1, 11)),
+    "text": [
+        "the quick brown fox jumps over the lazy dog tonight",
+        "the quick brown fox jumps over the lazy dog tonight",
+        "the quick brown fox jumps over the lazy cat tonight",
+        "partition pruning and predicate pushdown in parquet scans everywhere",
+        "partition pruning and predicate pushdown in parquet scans everywhere",
+        "a completely different document about cooking pasta recipes",
+        "structured streaming state stores and watermarks explained",
+        "an unrelated standing doc about parquet file readers",
+        "the quick brown fox jumps over the lazy dog tonite",
+        "structured streaming state stores and watermarks explained well",
+    ],
+})
+
+
+_STORE_TABLES = ("texts", "sigs", "banded")
+
+
+def _sink_batch(spark, *ids):
+    return spark.createDataFrame(_SINK_DOCS[_SINK_DOCS.doc_id.isin(ids)])
+
+
+def _pair_map(pdf) -> dict:
+    return {(a, b): j for a, b, j in zip(pdf.doc_id, pdf.dup_id, pdf.jaccard)}
+
+
+def _sink_pairs(spark, store) -> list:
+    return sorted(
+        map(tuple, spark.read.parquet(f"{store}/pairs").select("doc_id", "dup_id").collect())
+    )
+
+
+def _check_replay_appends_nothing(spark, prefix, store) -> None:
+    from py_evalfilter_spark.streaming import neardup
+
+    sink = neardup.incremental_neardup_sink(prefix, store, threshold=0.7, unit="char")
+    b0, b1 = _sink_batch(spark, 1, 8), _sink_batch(spark, 3)
+    sink(b0, 0)
+    sink(b1, 1)
+    once = _sink_pairs(spark, store), _store_counts(spark, prefix)
+    assert once[0] == [(1, 3)] and once[1] == {"texts": 3, "sigs": 3, "banded": 48}
+    sink(b1, 1)  # replay the same batch
+    assert (_sink_pairs(spark, store), _store_counts(spark, prefix)) == once
+
+
+def _store_counts(spark, prefix) -> dict:
+    return {t: spark.table(f"{prefix}_{t}").count() for t in _STORE_TABLES}
+
+
 class TestStreamingNearDup:
+    def test_timeout_duration_to_ms(self):
+        from py_evalfilter_spark.streaming.neardup import _duration_to_ms
+
+        assert _duration_to_ms("30 minutes") == 1_800_000
+        assert _duration_to_ms("1 second") == _duration_to_ms(1000) == 1000
+        assert _duration_to_ms("500 ms") == _duration_to_ms("500 milliseconds") == 500
+        assert _duration_to_ms("2 days") == 172_800_000
+        for bad in ("30", "abc", "3 fortnights", "0 seconds"):
+            with pytest.raises(ValueError, match="unparseable"):
+                _duration_to_ms(bad)
+
     def test_minhash_candidates_across_micro_batches(self, spark, tmp_path):
         """Streaming MinHash LSH (applyInPandasWithState keyed by
         (band, bucket)): near-dup docs arriving in DIFFERENT micro-batches
@@ -350,28 +414,16 @@ class TestStreamingNearDup:
         # the unrelated doc never pairs
         assert not any(6 in p for p in cands)
 
-    def test_incremental_sink_matches_batch_operator(self, spark, tmp_path):
+    def test_incremental_sink_matches_batch_operator(self, spark, tmp_path, sink_store):
         """foreachBatch incremental near-dup (signature-store design,
         BENCH/BASELINE.md r6): union of per-batch verified pairs must
         EQUAL the batch operator's full pair set — every pair is emitted
         by the batch its later member arrives in, exactly once, with the
         same jaccard."""
-        from pyspark.sql import functions as F
-
         from py_evalfilter_spark.operators import dedup
         from py_evalfilter_spark.streaming import neardup
 
-        texts = {
-            1: "the quick brown fox jumps over the lazy dog tonight",
-            2: "the quick brown fox jumps over the lazy dog tonight",
-            3: "the quick brown fox jumps over the lazy cat tonight",
-            4: "partition pruning and predicate pushdown in parquet scans everywhere",
-            5: "partition pruning and predicate pushdown in parquet scans everywhere",
-            6: "a completely different document about cooking pasta recipes",
-            7: "structured streaming state stores and watermarks explained",
-        }
-        pdf = pd.DataFrame({"doc_id": list(texts), "text": list(texts.values())})
-        sdf = spark.createDataFrame(pdf)
+        sdf = spark.createDataFrame(_SINK_DOCS).filter(F.col("doc_id") <= 7)
         src = str(tmp_path / "incr_docs")
         # dup pairs straddle batches: (1,2) across f1/f2, (4,5) across f1/f3;
         # (1,3) and (2,3) exercise new-vs-standing AND new-vs-new
@@ -379,7 +431,7 @@ class TestStreamingNearDup:
         sdf.filter(F.col("doc_id").isin(2, 3)).coalesce(1).write.parquet(f"{src}/f=2")
         sdf.filter(F.col("doc_id").isin(5, 7)).coalesce(1).write.parquet(f"{src}/f=3")
 
-        store = str(tmp_path / "incr_store")
+        prefix, store = sink_store
         stream = (
             spark.readStream.schema(sdf.schema)
             .option("maxFilesPerTrigger", 1)
@@ -387,7 +439,9 @@ class TestStreamingNearDup:
         )
         q = (
             stream.writeStream.foreachBatch(
-                neardup.incremental_neardup_sink(store, threshold=0.7, unit="char")
+                neardup.incremental_neardup_sink(
+                    prefix, store, threshold=0.7, unit="char"
+                )
             )
             .option("checkpointLocation", str(tmp_path / "incr_ckpt"))
             .trigger(availableNow=True)
@@ -399,48 +453,126 @@ class TestStreamingNearDup:
         want = dedup.minhash_lsh_pairs(
             sdf, "doc_id", "text", threshold=0.7
         ).toPandas()
-        key = lambda df: {
-            (a, b): j for a, b, j in zip(df.doc_id, df.dup_id, df.jaccard)
-        }
-        assert key(got) == key(want)
+        assert _pair_map(got) == _pair_map(want)
         assert len(got) == len(got.drop_duplicates(["doc_id", "dup_id"]))
-        assert (1, 2) in key(got) and (4, 5) in key(got)  # cross-batch pairs
+        assert (1, 2) in _pair_map(got) and (4, 5) in _pair_map(got)  # cross-batch
 
-    def test_incremental_sink_replay_idempotent(self, spark, tmp_path):
-        """foreachBatch is at-least-once: re-delivering a batch_id must
-        overwrite its own previous attempt (batch=N dirs) and must NOT see
-        its first attempt's signatures as standing state (batch < N read
-        filter) — pairs and store row counts end identical to a single
-        delivery."""
-        import pandas as pd
+    def test_incremental_sink_replay_idempotent(self, spark, sink_store):
+        """foreachBatch is at-least-once: re-delivering a batch_id whose
+        pairs are committed must not look it up again (its own first
+        attempt is in the store now) and must append nothing — pairs and
+        the row counts of all three store tables end identical to a
+        single delivery."""
+        _check_replay_appends_nothing(spark, *sink_store)
 
+    def test_incremental_sink_replay_without_success_markers(self, spark, sink_store):
+        """Replay detection does not depend on Hadoop's _SUCCESS marker:
+        with mapreduce.fileoutputcommitter.marksuccessfuljobs off, a
+        redelivered batch still appends nothing."""
+        conf = spark._jsc.hadoopConfiguration()
+        key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+        before = conf.get(key)
+        conf.setBoolean(key, False)
+        try:
+            _check_replay_appends_nothing(spark, *sink_store)
+        finally:
+            if before is None:
+                conf.unset(key)
+            else:
+                conf.set(key, before)
+        assert not os.path.exists(f"{sink_store[1]}/pairs/batch=1/_SUCCESS")
+
+    @pytest.mark.parametrize(
+        "killed, counts",
+        [
+            # died before the sigs/banded append
+            ("operators.dedup._write_store", {"texts": 4, "sigs": 2, "banded": 32}),
+            # died between the sigs and the banded append
+            ("sources.tables.write_bucketed", {"texts": 4, "sigs": 4, "banded": 32}),
+        ],
+        ids=["before_store_append", "between_sigs_and_banded"],
+    )
+    def test_incremental_sink_partial_replay(
+        self, spark, sink_store, monkeypatch, killed, counts
+    ):
+        """A first attempt that died after committing its pairs, part way
+        through its appends: the redelivered batch appends only what each
+        table lacks, so pairs and table counts equal a single delivery."""
+        from py_evalfilter_spark.operators import dedup
         from py_evalfilter_spark.streaming import neardup
 
-        store = str(tmp_path / "replay_store")
-        sink = neardup.incremental_neardup_sink(store, threshold=0.7, unit="char")
-        b0 = spark.createDataFrame(pd.DataFrame({
-            "doc_id": [1, 2],
-            "text": ["the quick brown fox jumps over the lazy dog tonight",
-                     "an unrelated standing doc about parquet file readers"],
-        }))
-        b1 = spark.createDataFrame(pd.DataFrame({
-            "doc_id": [3],
-            "text": ["the quick brown fox jumps over the lazy dog tonite"],
-        }))
-        sink(b0, 0)
+        prefix, store = sink_store
+        sink = neardup.incremental_neardup_sink(prefix, store, threshold=0.7, unit="char")
+        sink(_sink_batch(spark, 1, 8), 0)
+        b1 = _sink_batch(spark, 3, 9)
+
+        def executor_lost(*args, **kwargs):
+            raise RuntimeError("executor lost")
+
+        monkeypatch.setattr(f"py_evalfilter_spark.{killed}", executor_lost)
+        with pytest.raises(RuntimeError, match="executor lost"):
+            sink(b1, 1)
+        monkeypatch.undo()
+        assert _store_counts(spark, prefix) == counts
         sink(b1, 1)
-        once_pairs = sorted(
-            map(tuple, spark.read.parquet(f"{store}/pairs")
-                .select("doc_id", "dup_id", "jaccard").collect())
-        )
-        once_sigs = spark.read.parquet(f"{store}/signatures").count()
-        sink(b1, 1)  # replay the same batch
-        again_pairs = sorted(
-            map(tuple, spark.read.parquet(f"{store}/pairs")
-                .select("doc_id", "dup_id", "jaccard").collect())
-        )
-        assert again_pairs == once_pairs and once_pairs  # (1,3) found once
-        assert spark.read.parquet(f"{store}/signatures").count() == once_sigs
+        once = dedup.minhash_lsh_pairs(
+            _sink_batch(spark, 1, 8, 3, 9), "doc_id", "text", threshold=0.7
+        ).select("doc_id", "dup_id").collect()
+        assert _sink_pairs(spark, store) == sorted(map(tuple, once)) and once
+        assert _store_counts(spark, prefix) == {"texts": 4, "sigs": 4, "banded": 64}
+
+    def test_incremental_sink_restart_in_fresh_catalog_fails_loudly(
+        self, spark, sink_store
+    ):
+        """The tables live in the session catalog; a restarted query whose
+        catalog lost them (an in-memory catalog in a new application) must
+        fail on its first batch and leave the store's files as they were,
+        not re-create an empty store over them."""
+        from py_evalfilter_spark.streaming import neardup
+
+        prefix, store = sink_store
+        sink = neardup.incremental_neardup_sink(prefix, store, threshold=0.7, unit="char")
+        sink(_sink_batch(spark, 1, 8), 0)
+        for table in _STORE_TABLES:
+            spark.sql(f"DROP TABLE {prefix}_{table}")  # external: files stay
+        with pytest.raises(Exception, match="non-empty directory"):
+            sink(_sink_batch(spark, 3), 1)
+        files = {t: spark.read.parquet(f"{store}/{t}").count() for t in _STORE_TABLES}
+        assert files == {"texts": 2, "sigs": 2, "banded": 32}
+        assert not os.path.exists(f"{store}/pairs/batch=1")
+
+    def test_incremental_sink_is_the_one_store(self, spark, sink_store):
+        """The sink's store is dedup's store: compacting it between
+        micro-batches changes no pair, and minhash_lsh_pairs_incremental
+        over read_neardup_store(prefix) finds exactly the pairs the sink
+        writes for the next batch."""
+        from py_evalfilter_spark.operators import dedup
+        from py_evalfilter_spark.streaming import neardup
+
+        prefix, store = sink_store
+        kw = dict(threshold=0.7, unit="char")
+        sink = neardup.incremental_neardup_sink(prefix, store, **kw)
+        batches = [(1, 4, 6), (2, 3), (5, 7, 8), (9, 10)]
+        for batch_id, ids in enumerate(batches[:2]):
+            sink(_sink_batch(spark, *ids), batch_id)
+        dedup.compact_neardup_store(spark, prefix)
+        sink(_sink_batch(spark, *batches[2]), 2)
+
+        s_sigs, s_banded = dedup.read_neardup_store(spark, prefix)
+        last = _sink_batch(spark, *batches[3])
+        want_last = dedup.minhash_lsh_pairs_incremental(
+            last, spark.table(f"{prefix}_texts"), "doc_id", "text",
+            old_sigs=s_sigs, old_banded=s_banded, **kw,
+        ).toPandas()  # collected before the sink folds the batch in
+        sink(last, 3)
+        got = spark.read.parquet(f"{store}/pairs").toPandas()
+        assert _pair_map(got[got.batch == 3]) == _pair_map(want_last)
+        # against the compacted part and against the append after it
+        assert {(1, 9), (7, 10)} <= set(_pair_map(want_last))
+
+        want = dedup.minhash_lsh_pairs(spark.createDataFrame(_SINK_DOCS), "doc_id", "text", **kw)
+        assert _pair_map(got) == _pair_map(want.toPandas())
+        assert _store_counts(spark, prefix) == {"texts": 10, "sigs": 10, "banded": 160}
 
     def test_replayed_docs_do_not_duplicate_pairs(self, spark, tmp_path):
         """At-least-once replay (ADVICE r4): redelivering the same docs in
